@@ -30,8 +30,13 @@ object Pipeline {
     // then outranks an earlier one's in D1's last-wins (the scheduled-poll
     // recency model); inputs without it (plain text scans) order only
     // within each envelope. 2^32 >> any envelope's ac[] length.
+    // posexplode_OUTER + a pos filter, not posexplode: for a non-outer
+    // generator Catalyst infers `size(ac) > 0` below the Generate and
+    // inlines the from_json alias into that Filter, which parses every
+    // envelope a second time. An empty or null `ac` still yields no rows.
     parsed
-      .select(col("arrival_idx"), posexplode(col("env.ac")).as(Seq("pos", "ac")))
+      .select(col("arrival_idx"), posexplode_outer(col("env.ac")).as(Seq("pos", "ac")))
+      .filter(col("pos").isNotNull)
       .select(
         (col("arrival_idx") * (1L << 32) + col("pos")).cast("long").as("seq"),
         col("ac.*"))
@@ -45,7 +50,7 @@ object Pipeline {
     // ident → filt → dedup → projection). The derivation is row-wise, so
     // it commutes with last-wins: values are identical, but the remarks
     // block / unit conversions / metadata embed run over |distinct ids|
-    // rows instead of every raw record, and D1's max_by struct carries
+    // rows instead of every raw record, and D1's top-1 window carries
     // the raw fields instead of the wider derived row.
     val keyed = CotTransform.keyed(aircraft)
     val deduped = Dedup.lastWins(keyed, "id", "seq")

@@ -25,7 +25,7 @@ package object api {
     // ---- dedup (reference D1/D2 + training-pipeline near-dup) ----------
 
     /** Last-wins dedup by `key`, arrival order given by `ord` (the
-      * reference's D1 as a combiner-friendly max_by aggregate). */
+      * reference's D1 as a top-1 window, pruned map-side). */
     def lastWinsDedup(key: String, ord: String): DataFrame =
       adsbx.Dedup.lastWins(df, key, ord)
 

@@ -11,14 +11,36 @@ import scala.collection.concurrent.TrieMap
   * intermediate referenced by two join sides is computed twice). */
 object Staging {
 
-  private val cache =
-    TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private type Key = (SparkSession, String, String)
+
+  /** A build run at most once however many callers race for it: the
+    * first caller builds while later ones block until it is done. A build
+    * that throws leaves the slot empty, so the next caller retries. */
+  private final class Once[T](build: () => T) {
+    @volatile private var result: Option[T] = None
+    def value: T = result.getOrElse(synchronized {
+      if (result.isEmpty) result = Some(build())
+      result.get
+    })
+    /** The result, after waiting out a build in flight; None if none ran. */
+    def built: Option[T] = synchronized(result)
+  }
+
+  // single-flight: the slot is placed with putIfAbsent before anything is
+  // built, so consumers racing on one key (FormatOps.concurrently jobs)
+  // share one build instead of each persisting a copy and leaking all but
+  // the one the map keeps
+  private def once[T](m: TrieMap[Key, Once[T]], k: Key)(build: => T): T = {
+    val fresh = new Once(() => build)
+    m.putIfAbsent(k, fresh).getOrElse(fresh).value
+  }
+
+  private val cache = TrieMap.empty[Key, Once[DataFrame]]
 
   // driver-side artifacts (a learned merge table, a trained codebook)
   // shared across queries under the same per-pass accounting as staged
   // frames: computed once per (session, corpus, key), dropped by clear()
-  private val valueCache =
-    TrieMap.empty[(SparkSession, String, String), Any]
+  private val valueCache = TrieMap.empty[Key, Once[Any]]
 
   // ------------------------------------------------- build instrumentation
   // (r16 — the bench staging-cost attribution, r14 verdict item 5): when
@@ -68,7 +90,7 @@ object Staging {
 
   def staged(s: SparkSession, dir: String, key: String)
             (build: => DataFrame): DataFrame =
-    cache.getOrElseUpdate((s, dir, key),
+    once(cache, (s, dir, key))(
       timed(key) {
         build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       } { df =>
@@ -80,7 +102,7 @@ object Staging {
 
   def stagedValue[T](s: SparkSession, dir: String, key: String)
                     (build: => T): T =
-    valueCache.getOrElseUpdate((s, dir, key),
+    once(valueCache, (s, dir, key))(
       timed(key)(build)(_ => ())).asInstanceOf[T]
 
   /** Unpersist and forget every staged intermediate of a session. Bench
@@ -92,7 +114,7 @@ object Staging {
     cache.keys.filter(_._1 eq s).foreach { k =>
       // blocking: lazily-removed blocks would coexist with the rebuilt
       // caches through the next pass and turn its tail into GC churn
-      cache.remove(k).foreach(_.unpersist(blocking = true))
+      cache.remove(k).flatMap(_.built).foreach(_.unpersist(blocking = true))
     }
     valueCache.keys.filter(_._1 eq s).foreach(valueCache.remove)
   }

@@ -12,8 +12,9 @@ import graft.adsbx.{AdsbxConfig, Pipeline}
   * so dedup scope = one snapshot, matching the reference's stateless
   * between-invocations semantics (SURVEY §1.1).
   *
-  * Scale posture: foreachBatch reuses the batch plans (broadcast join,
-  * partial-agg dedup); state across batches is zero, so the stream runs
+  * Scale posture: foreachBatch reuses the batch plans (one envelope
+  * parse, broadcast join, top-1 window dedup with a map-side
+  * WindowGroupLimit); state across batches is zero, so the stream runs
   * indefinitely with constant memory.
   */
 object AdsbxStream {

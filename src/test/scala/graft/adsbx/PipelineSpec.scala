@@ -85,4 +85,31 @@ class PipelineSpec extends SparkSpec {
       Pipeline.fromEnvelopeJson(spark, bad).collect()
     }
   }
+
+  private def acJson(hex: String) =
+    s"""{"hex":"$hex","type":"adsb_icao","r":"N$hex","lat":40.0,"lon":-119.0,"seen_pos":0.1,"seen":0.2}"""
+
+  test("V1: empty or ac-less envelopes in a log yield no rows; seq unchanged") {
+    val log = Seq(
+      """{"msg":"","ac":[]}""",
+      s"""{"msg":"ok","ac":[${acJson("a1")},${acJson("a2")}]}""",
+      """{"msg":"","ac":[]}""",
+      """{"msg":"no ac"}""",
+      s"""{"msg":"ok","ac":[${acJson("b1")}]}""",
+      """{"msg":"","ac":[]}""")
+    val got = sources.AdsbxSource.fromJsonStrings(spark, log)
+      .select("seq", "hex").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    // seq = arrival_idx * 2^32 + position in ac[]
+    assert(got == Set((1L << 32, "a1"), ((1L << 32) + 1, "a2"), (4L << 32, "b1")))
+  }
+
+  test("V1: one malformed envelope in a log still fails the parse (FAILFAST)") {
+    val log = Seq(
+      s"""{"msg":"ok","ac":[${acJson("a1")}]}""",
+      """{"msg":"ok","ac":[{"hex":"x1","lat":""",
+      """{"msg":"","ac":[]}""")
+    intercept[Exception] {
+      sources.AdsbxSource.fromJsonStrings(spark, log).collect()
+    }
+  }
 }

@@ -25,7 +25,7 @@ object DumpPlans {
       "rel_bucketed_join" -> "bucketed scans (Bucketed: true, SelectedBucketsCount 8/8): no shuffle Exchange on either join input — at this scale AQE still picks broadcast for the small side; PlanSpec pins the zero-exchange sort-merge form with broadcast disabled",
       "dedup_containment" -> "PPJoin-style prefix filter: rarest-shingle prefix (window top-p per doc) equi-joined against the corpus shingle table — candidates only from prefix hits, never all-pairs",
       "text_line_dedup" -> "line-frequency blocklist (vocabulary-sized) broadcast LEFT ANTI join, per-doc reassembly",
-      "cot_pipeline_corpus" -> "P1-P17 fused projection + max_by dedup + broadcast includes join",
+      "cot_pipeline_corpus" -> "P1-P17 fused projection + top-1 window dedup (WindowGroupLimit both sides of the one shuffle) + broadcast includes join",
       "geo_proximity_pairs" -> "spatial join: 3x3 neighbor-cell explode -> hash equi-join on the cell key (never all-pairs); exact distance predicate prunes after candidate generation",
       "graph_pagerank" -> "fixed-point PageRank: staged edge+degree table reused every iteration, ONE hash-agg shuffle per iteration, node count as a broadcast 1-row aggregate (no driver count)",
       "rel_cdc_apply" -> "CDC fold: max_by(struct) partial aggregate — map-side combine shrinks each partition to one row per key BEFORE the shuffle; tombstone filter after",

@@ -71,7 +71,7 @@ class PlanSpec extends SparkSpec {
     val p = plan(df)
     assert(p.contains("BroadcastHashJoin"), "includes join must broadcast")
     assert(!p.contains("SortMergeJoin"), "no shuffle join in the pipeline")
-    // D1 (max_by on id) and D2 (dropDuplicates on id) are keyed identically
+    // D1 and D2 (top-1 windows on id) are keyed identically
     // and the broadcast join preserves partitioning, so D2 must reuse D1's
     // partitioning. Exactly 2 shuffles total: the aircraft dedup, and the
     // probe-build aggregation on the config-sized includes side.
@@ -80,6 +80,31 @@ class PlanSpec extends SparkSpec {
     val shuffles = simple.linesIterator.count(l =>
       l.contains("Exchange") && !l.contains("Broadcast") && !l.contains("Reused"))
     assert(shuffles == 2, s"expected 2 shuffles, got $shuffles:\n$simple")
+  }
+
+  test("snapshot source: each envelope is parsed once (one from_json)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_snap")
+    for (i <- 0 until 2)
+      java.nio.file.Files.writeString(dir.resolve(s"s$i.json"),
+        graft.adsbx.Fixtures.envelopeJson(Seq(graft.adsbx.Fixtures.aircraft.head)))
+    val df = graft.adsbx.sources.AdsbxSource.fromSnapshotDir(spark, dir.toString)
+    assert(df.count() == 2)
+    // a Filter inferred under a non-outer Generate would carry a second
+    // copy of the parse
+    val executed = df.queryExecution.executedPlan.toString
+    assert("from_json\\(".r.findAllMatchIn(executed).size == 1,
+      s"expected exactly one from_json:\n$executed")
+  }
+
+  test("CoT pipeline: D1/D2 plan no SortAggregate") {
+    // includes filtering off: the config-sized includes probe (a struct
+    // max over <= ~100 rows) is the one aggregate left with filtering on
+    val p = plan(graft.adsbx.Pipeline.run(
+      graft.adsbx.Fixtures.aircraftDf(spark),
+      graft.adsbx.Fixtures.includesDf(spark),
+      graft.adsbx.AdsbxConfig(includesFiltering = false)))
+    assert(!p.contains("SortAggregate"), s"SortAggregate in the pipeline:\n$p")
+    assert(p.contains("WindowGroupLimit"), s"top-1 not pushed into D1's window:\n$p")
   }
 
   test("bucketed tables join with no shuffle exchange") {
