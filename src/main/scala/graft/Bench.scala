@@ -159,8 +159,8 @@ object Bench {
     // timing hides it). Normalization strips everything legitimately
     // run-variant — expression/plan ids, this app's scratch paths and id,
     // listed-file counts/sizes, statistics — and keeps the operator tree.
-    // (normalization lives in PlanNorm — shared with the fresh-JVM
-    // determinism probe so the two can never diverge by hand again)
+    // (normalization lives in PlanNorm, the same text SPARK_GRAFT_PLAN_DUMP
+    // writes below)
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(3).mkString(" ")
@@ -364,13 +364,15 @@ object Bench {
       .filter(n => n.startsWith("stream_") || n.startsWith("src_"))
     val fixtureFloorJson =
       fixtureFloor.map("\"" + _ + "\"").mkString("[", ",", "]")
-    try java.nio.file.Files.writeString(
+    // a SPARK_GRAFT_ONLY subset run prints its line but leaves the full
+    // record alone
+    if (only.isEmpty) try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"),
       f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec%.2f,"cpus":$cpus,"n_noisy":${noisy.size},"noisy":$noisyJson,"n_still_noisy":${stillNoisy.size},"still_noisy":$stillNoisyJson,"load_passes":$loadPasses,"staging_total":$stagingTotal%.2f,"staging_secs":$stagingJson,"staging_pass_secs":$stagingPassJson,"query_staging":$queryStagingJson,"fixture_floor":$fixtureFloorJson,"queries":${dict(results)},"pass_secs":$perPass,"plan_sha":$planShaJson,"stream_phases":$phasesJson,"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"sf":"$sfDir"}""")
     catch { case scala.util.control.NonFatal(_) => () }
     // "queries" = the 15 slowest (the outlier-audit set); full map in the file
     val slowest = results.sortBy(-_._2).take(15)
-    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec%.2f,"cpus":$cpus,"n_queries":${results.size},"n_noisy":${noisy.size},"n_still_noisy":${stillNoisy.size},"staging_total":$stagingTotal%.2f,"load_passes":$loadPasses,"queries":${dict(slowest)},"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"detail":"BENCH_LOCAL.json","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec%.2f,"cpus":$cpus,"n_queries":${results.size},"n_noisy":${noisy.size},"n_still_noisy":${stillNoisy.size},"staging_total":$stagingTotal%.2f,"load_passes":$loadPasses,"queries":${dict(slowest)},"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"detail":"${if (only.isEmpty) "BENCH_LOCAL.json" else "none"}","sf":"$sfDir"}""")
     graft.ops.Fs.cleanupAppScratch(spark)
     spark.stop()
   }

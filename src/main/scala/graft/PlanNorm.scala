@@ -1,11 +1,10 @@
 package graft
 
-/** The ONE plan-fingerprint normalizer — shared by [[Bench]]'s official
-  * `plan_sha` capture and the fresh-JVM determinism probe
-  * (`graft.bench.PlanShaProbe` in the test tree). The probe exists
-  * precisely to validate this normalization; as separate hand-copies the
-  * two silently diverged risk-free (the r15 diff added `StorageLevel()`
-  * to both BY HAND), so the regex list lives here once.
+/** The ONE plan-fingerprint normalizer behind [[Bench]]'s `plan_sha` and
+  * its `SPARK_GRAFT_PLAN_DUMP=<dir>` per-query plan files. The fresh-JVM
+  * determinism check is two Bench runs dumping into two directories and
+  * a `diff -r` of the dumps: any line that differs is run-variant text
+  * this normalization still lets through.
   *
   * Normalization strips everything legitimately run-variant — expression
   * / plan ids, lambda JVM identities, this app's scratch paths and id,

@@ -18,13 +18,21 @@ object Pipeline {
     * mismatch (task.ts:131-134). Returns one row per aircraft, with an
     * explicit `seq` column capturing array position (= arrival order, the
     * order D1's last-wins is defined over). */
-  def fromEnvelopeJson(spark: SparkSession, jsonLines: DataFrame): DataFrame = {
+  def fromEnvelopeJson(spark: SparkSession, jsonLines: DataFrame): DataFrame =
+    aircraftRows(parseEnvelopes(jsonLines, "FAILFAST"))
+
+  /** `value`, `arrival_idx` (0 when absent) and the `env` struct parsed
+    * under from_json `mode` (FAILFAST strict, PERMISSIVE quarantining). */
+  private[adsbx] def parseEnvelopes(jsonLines: DataFrame, mode: String): DataFrame = {
     val withBase =
       if (jsonLines.columns.contains("arrival_idx")) jsonLines
       else jsonLines.withColumn("arrival_idx", lit(0L))
-    val parsed = withBase.select(col("arrival_idx"),
-      from_json(col("value"), Schemas.envelope,
-        Map("mode" -> "FAILFAST")).as("env"))
+    withBase.select(col("value"), col("arrival_idx"),
+      from_json(col("value"), Schemas.envelope, Map("mode" -> mode)).as("env"))
+  }
+
+  /** One row per aircraft of each parsed envelope, with its `seq`. */
+  private[adsbx] def aircraftRows(parsed: DataFrame): DataFrame =
     // seq spans snapshots WHEN the input carries an `arrival_idx` column
     // (SnapshotSource and fromJsonStrings do): a later snapshot's aircraft
     // then outranks an earlier one's in D1's last-wins (the scheduled-poll
@@ -33,14 +41,14 @@ object Pipeline {
     // posexplode_OUTER + a pos filter, not posexplode: for a non-outer
     // generator Catalyst infers `size(ac) > 0` below the Generate and
     // inlines the from_json alias into that Filter, which parses every
-    // envelope a second time. An empty or null `ac` still yields no rows.
+    // envelope a second time. An empty or null `ac` (or a null `env`)
+    // still yields no rows.
     parsed
       .select(col("arrival_idx"), posexplode_outer(col("env.ac")).as(Seq("pos", "ac")))
       .filter(col("pos").isNotNull)
       .select(
         (col("arrival_idx") * (1L << 32) + col("pos")).cast("long").as("seq"),
         col("ac.*"))
-  }
 
   /** Full pipeline over an aircraft DataFrame that already has
     * `Schemas.adsbResponse` columns + a `seq` ordering column. */

@@ -1,6 +1,6 @@
 package graft.adsbx.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.adsbx.{Pipeline, Schemas}
 
 /** S1 — the ADSBX snapshot source (reference task.ts:118-129), minus the
@@ -21,11 +21,14 @@ object AdsbxSource {
     * HTTP fetch returns — the zero-egress stand-in for the REST call).
     * Sequence position = arrival order, so last-wins dedup prefers later
     * envelopes for duplicate ids. */
-  def fromJsonStrings(spark: SparkSession, envelopes: Seq[String]): DataFrame = {
+  def fromJsonStrings(spark: SparkSession, envelopes: Seq[String]): DataFrame =
+    Pipeline.fromEnvelopeJson(spark, indexed(spark, envelopes))
+
+  /** Envelopes as (`value`, `arrival_idx` = list index). */
+  private def indexed(spark: SparkSession, envelopes: Seq[String]): DataFrame = {
     import spark.implicits._
-    Pipeline.fromEnvelopeJson(spark,
-      envelopes.zipWithIndex.map { case (v, i) => (v, i.toLong) }
-        .toDF("value", "arrival_idx"))
+    envelopes.zipWithIndex.map { case (v, i) => (v, i.toLong) }
+      .toDF("value", "arrival_idx")
   }
 
   /** Batch: a directory/glob of envelope JSON documents, one per line.
@@ -55,19 +58,15 @@ object AdsbxSource {
     * Returns (aircraft rows from well-formed envelopes, quarantined raw
     * lines for the dead-letter sink). */
   def fromJsonStringsPermissive(spark: SparkSession,
-      envelopes: Seq[String]): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val lines = envelopes.toDF("value")
-    val parsed = lines.withColumn("env",
-      from_json(col("value"), Schemas.envelope, Map("mode" -> "PERMISSIVE")))
+      envelopes: Seq[String]): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    // the strict path's explode and arrival-order seq; only the parse
+    // mode differs
+    val parsed = Pipeline.parseEnvelopes(indexed(spark, envelopes), "PERMISSIVE")
     // from_json PERMISSIVE null-fills on mismatch: a null/ac-less env is bad
     val bad = parsed.filter(col("env").isNull || col("env.ac").isNull)
       .select(col("value"))
-    val good = parsed.filter(col("env").isNotNull && col("env.ac").isNotNull)
-      .select(posexplode(col("env.ac")).as(Seq("seq", "ac")))
-      .select(col("seq").cast("long").as("seq"), col("ac.*"))
-    (good, bad)
+    (Pipeline.aircraftRows(parsed), bad)
   }
 
   /** Batch read of a snapshot directory through the native DataSource V2

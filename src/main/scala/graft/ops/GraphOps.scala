@@ -148,6 +148,19 @@ object GraphOps {
   def hits(e0: DataFrame, iters: Int = HITS_ITERS): DataFrame =
     hitsKernel(e0, iters, forcedParts = None)
 
+  /** -0.0 → 0.0 for boxed float/double node keys (java equality/hashing
+    * splits the two where SQL unifies them; NaNs already unify). An object
+    * of its own, so the kernels' closures that call it capture no GraphOps. */
+  private object NodeKey {
+    def unifyZero(v: Any): Any = v match {
+      case d: java.lang.Double if d.doubleValue == 0.0d =>
+        java.lang.Double.valueOf(0.0d)
+      case f: java.lang.Float if f.floatValue == 0.0f =>
+        java.lang.Float.valueOf(0.0f)
+      case x => x
+    }
+  }
+
   /** `hits` with an explicit kernel width — test hook so the distributed
     * superstep path stays covered (and provably equal to the
     * single-partition fast path) on inputs whose size rule would pick
@@ -160,7 +173,7 @@ object GraphOps {
     val s = e0.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eRdd = e0.select(col("src"), col("dst")).rdd
-      .map(r => (r.get(0), r.get(1)))
+      .map(r => (NodeKey.unifyZero(r.get(0)), NodeKey.unifyZero(r.get(1))))
     // partition count follows the input's SIZE, not the session's task
     // width (guide §2: fewer, larger partitions) — a 28k-edge bench graph
     // in 32 one-row-ish tasks pays pure scheduling per half-step, while a
@@ -677,21 +690,11 @@ object GraphOps {
     val part = new org.apache.spark.HashPartitioner(forcedParts.getOrElse(
       math.max(1L, math.min(widthCap,
         (bytesEst * 2 / (16L << 20)).toLong + 1L)).toInt))
-    // r17 (advisor item): normalize -0.0 to 0.0 for float/double node ids
-    // — boxed java equality/hashing splits the two where the old
-    // DataFrame join/groupBy unified them (Spark normalizes -0.0 in
-    // comparisons and hash keys). All NaN bit patterns already unify:
-    // java.lang.Double.equals/hashCode go through doubleToLongBits, which
-    // canonicalizes NaNs.
     def copyOf(v: Any): Any = v match {
       case u: UTF8String => u.copy()
       case r: InternalRow => r.copy()
       case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-      case d: java.lang.Double if d.doubleValue == 0.0d =>
-        java.lang.Double.valueOf(0.0d)
-      case f: java.lang.Float if f.floatValue == 0.0f =>
-        java.lang.Float.valueOf(0.0f)
-      case x => x
+      case x => NodeKey.unifyZero(x)
     }
     val ord = org.apache.spark.sql.catalyst.util.TypeUtils
       .getInterpretedOrdering(dt)

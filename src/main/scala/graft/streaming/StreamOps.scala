@@ -154,12 +154,9 @@ object StreamOps {
     // stream queries (3-pass medians, sf0.1): width 1 → 24.7 s,
     // 2 → 25.4, 4 → 15.0, 8 → 18.2, 16 → 22.9 — the 4-wide setting is
     // the measured optimum, state-store count and per-task overhead
-    // dominate above it, lost parallelism below. The env knob exists so
-    // the probe matrix is reproducible without editing code.
+    // dominate above it, lost parallelism below.
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val effParts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt).getOrElse(stateParts)
-    spark.conf.set("spark.sql.shuffle.partitions", effParts.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
     // Whole-stage codegen OFF for the micro-batch run (r13, measured):
     // event-time watermark values are baked into the generated code as
     // literals, so EVERY batch of a watermarked query is a codegen cache
@@ -172,44 +169,29 @@ object StreamOps {
     // shape, state layout, and semantics are identical either way.
     // RE-MEASURED r14 (heavy-6 probe, medians): codegen on = 16.8 s vs
     // off = 15.0 s at width 4 — still a net loss at bench batch sizes,
-    // including for the join-heavy shapes. Env knob for reproducibility.
+    // including for the join-heavy shapes.
+    // The state-store provider is the session's own: r17 measured RocksDB
+    // 1.6× slower on the heavy-6 (per-batch native open/commit against
+    // KB-scale state; its win is state that outgrows the executor heap).
     val prevCg = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_CODEGEN", "false"))
-    // State-store provider knob (r17, probe-only): same reproducible-
-    // matrix contract as SPARK_GRAFT_STREAM_PARTS/CODEGEN — "rocksdb"
-    // selects the RocksDB provider, anything else is taken as a provider
-    // class name. Default (unset) keeps Spark's HDFS-backed provider.
-    // A/B MEASURED r17 on the heavy-6 (see OPTIMIZATION_r17.md): RocksDB
-    // pays per-batch native-store open/commit against micro-batches whose
-    // state is KBs — a loss at bench batch sizes, the expected trade (its
-    // win is state that outgrows the executor heap).
-    val ssKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevSs = spark.conf.get(ssKey)
-    sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").foreach { v =>
-      spark.conf.set(ssKey,
-        if (v == "rocksdb")
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else v)
-    }
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    // resolve the result (analysis is eager, so the frame keeps the sink's
+    // relation), then UNREGISTER the sink's temp view, also when the query
+    // fails: every stream run creates a fresh sink table, and a long
+    // session that never drops the names pins hundreds of buffered result
+    // tables on the heap — the returned frame alone keeps this one alive
+    // until the caller drops it
     try {
       runInstrumented(streamed.writeStream
         .format("memory").queryName(name)
         .outputMode(outputMode)
         .trigger(Trigger.AvailableNow()))
+      spark.table(name)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       spark.conf.set("spark.sql.codegen.wholeStage", prevCg)
-      spark.conf.set(ssKey, prevSs)
+      spark.catalog.dropTempView(name)
     }
-    // resolve the result (analysis is eager, so the frame keeps the sink's
-    // relation), then UNREGISTER the sink's temp view: every stream run
-    // creates a fresh sink table, and a long session that never drops the
-    // names pins hundreds of buffered result tables on the heap — the
-    // returned frame alone keeps this one alive until the caller drops it
-    val out = spark.table(name)
-    spark.catalog.dropTempView(name)
-    out
   }
 
   /** Streaming hourly tumbling-window aggregation in APPEND mode with a

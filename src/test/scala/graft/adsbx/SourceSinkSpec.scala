@@ -3,6 +3,7 @@ package graft.adsbx
 import graft.SparkSpec
 import graft.adsbx.sources.AdsbxSource
 import graft.adsbx.sinks.FeatureSink
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S1 source entry points + O2/O3 sink shapes. */
@@ -32,6 +33,36 @@ class SourceSinkSpec extends SparkSpec {
     assert(good.count() == 2) // the two aircraft from the valid envelope
     val quarantined = bad.collect().map(_.getString(0)).toSet
     assert(quarantined == Set("""{"msg":"ok","ac":42}""", "not json at all"))
+  }
+
+  // N2 again, at position 0: an earlier position than in `envelope`
+  private val later =
+    """{"msg":"ok","ac":[{"hex":"a2","type":"adsb_icao","flight":"LATE","r":"N2","lat":41.0,"lon":-118.0,"gs":300.0,"seen_pos":0.1,"seen":0.2}]}"""
+
+  test("PERMISSIVE: good rows carry the strict source's arrival-order seq") {
+    def rows(df: DataFrame) = df.select("seq", "hex", "flight").collect().toSet
+    val envs = Seq(envelope, later)
+    assert(rows(AdsbxSource.fromJsonStringsPermissive(spark, envs)._1) ==
+      rows(AdsbxSource.fromJsonStrings(spark, envs)))
+  }
+
+  test("PERMISSIVE: the later envelope's record wins D1 for a shared id") {
+    val (good, _) = AdsbxSource.fromJsonStringsPermissive(spark, Seq(envelope, later))
+    val out = Pipeline.run(good, Fixtures.includesDf(spark),
+      AdsbxConfig(includesFiltering = false))
+    assert(out.filter(col("id") === "n2").select("callsign").head().getString(0) == "LATE")
+  }
+
+  test("PERMISSIVE: each good envelope is parsed once (one from_json)") {
+    // keep the parse in the plan: over an in-memory list the optimizer
+    // would otherwise evaluate it into a LocalTableScan
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    val (good, _) = AdsbxSource.fromJsonStringsPermissive(spark, Seq(envelope, later))
+    val executed = try good.queryExecution.executedPlan.toString
+      finally spark.conf.unset(key)
+    assert("from_json\\(".r.findAllMatchIn(executed).size == 1,
+      s"expected exactly one from_json:\n$executed")
   }
 
   test("S4: schema introspection exposes envelope + record schemas") {

@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
   * min-of-2 let one contended pass poison a ratio; the median is the
   * stable estimator the sf0.1 bench already uses), ratio recorded to
   * BENCH_SF1_FULL.json together with a worst-ratio list so scale
-  * regressions are tracked round-over-round like sf0.1 ones.
-  * Complements BenchSf1 (heavy set): this run answers "does ANY query
-  * blow up super-linearly at 10x data", not just the known-heavy tail.
+  * regressions are tracked round-over-round like sf0.1 ones. The run
+  * answers "does ANY query blow up super-linearly at 10x data"; name
+  * filters rehearse a chosen set, the known-heavy tail for one.
   *
   * Args: optional query-name filters (substring match) to rehearse a
   * subset while iterating; no args = all queries + the committed record. */

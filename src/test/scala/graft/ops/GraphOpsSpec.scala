@@ -191,4 +191,15 @@ class GraphOpsSpec extends SparkSpec {
       s"-0.0 must normalize to 0.0, got nodes ${got.keySet}")
     assert(got.values.toSet.size == 1, s"triangle must cohere: $got")
   }
+
+  test("hits: -0.0 and 0.0 double node ids are one node on both kernels") {
+    val e = Seq((-0.0d, 1.0d), (0.0d, 2.0d), (1.0d, 2.0d)).toDF("src", "dst")
+    for (df <- Seq(GraphOps.hits(e), GraphOps.hitsKernel(e, 4, Some(3)))) {
+      // raw bits: Scala's == and Set would unify the two zeros themselves
+      val nodes = df.collect().map(r =>
+        java.lang.Double.doubleToRawLongBits(r.getDouble(0)))
+      assert(nodes.sorted.toSeq == Seq(0.0d, 1.0d, 2.0d)
+        .map(java.lang.Double.doubleToRawLongBits), s"nodes ${nodes.toSeq}")
+    }
+  }
 }

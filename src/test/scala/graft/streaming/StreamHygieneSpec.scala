@@ -23,6 +23,25 @@ class StreamHygieneSpec extends SparkSpec {
       s"stream sink temp views leaked: ${leaked.mkString(", ")}")
   }
 
+  test("runToMemory restores shuffle width and codegen, also when the query fails") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(spark.conf.get)
+    // values the run itself never sets, so a missed restore shows
+    val prior = Seq("3", "true")
+    keys.zip(prior).foreach { case (k, v) => spark.conf.set(k, v) }
+    val ev = StreamOps.eventsStream(spark, dir)
+    try {
+      StreamOps.runToMemory(ev.select("event_id"), "append").count()
+      assert(keys.map(spark.conf.get) == prior)
+      intercept[Exception] { StreamOps.runToMemory(
+        ev.select(raise_error(lit("boom")).cast("string")), "append") }
+      assert(keys.map(spark.conf.get) == prior)
+      assert(!spark.catalog.listTables().collect()
+        .exists(_.name.startsWith("graft_stream_")), "failed run leaked its sink")
+    } finally keys.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("cleanupAppScratch empties every scratch root of this app") {
     val appId = spark.sparkContext.applicationId
     // materialize scratch in all three classes: a stream checkpoint
