@@ -90,19 +90,23 @@ object Bench {
     // CPU-bound and median-of-5, so jitter is a single-digit-percent
     // term; bench_compare additionally headlines RAW ratios and treats
     // the normalized ones as context.
+    // SPARK_GRAFT_ONLY: comma-separated query subset for targeted runs
+    // (the sf10 spot rehearsal times 8 queries against a 100x corpus —
+    // running all 252 there would take hours for no added signal). A
+    // subset run skips the calibration (~80 s at 4 vCPUs, more than a
+    // few-query subset takes) and prints "calib_sec":null.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def calibOnce(): Double = {
       val t0 = System.nanoTime()
       spark.range(0L, 13000000000L, 1L, cpus.toInt)
         .selectExpr("bit_xor(xxhash64(id))").collect() // xor: no ANSI overflow
       (System.nanoTime() - t0) / 1e9
     }
-    calibOnce() // warm the calibration plan itself
-    val calibSec = Seq.fill(5)(calibOnce()).sorted.apply(2)
-    // SPARK_GRAFT_ONLY: comma-separated query subset for targeted runs
-    // (the sf10 spot rehearsal times 8 queries against a 100x corpus —
-    // running all 252 there would take hours for no added signal)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val calibSec = if (only.isDefined) "null" else {
+      calibOnce() // warm the calibration plan itself
+      f"${Seq.fill(5)(calibOnce()).sorted.apply(2)}%.2f"
+    }
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     // measurement basis: .count(), deliberately — it lets Catalyst prune
@@ -368,11 +372,11 @@ object Bench {
     // record alone
     if (only.isEmpty) try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec%.2f,"cpus":$cpus,"n_noisy":${noisy.size},"noisy":$noisyJson,"n_still_noisy":${stillNoisy.size},"still_noisy":$stillNoisyJson,"load_passes":$loadPasses,"staging_total":$stagingTotal%.2f,"staging_secs":$stagingJson,"staging_pass_secs":$stagingPassJson,"query_staging":$queryStagingJson,"fixture_floor":$fixtureFloorJson,"queries":${dict(results)},"pass_secs":$perPass,"plan_sha":$planShaJson,"stream_phases":$phasesJson,"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"sf":"$sfDir"}""")
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec,"cpus":$cpus,"n_noisy":${noisy.size},"noisy":$noisyJson,"n_still_noisy":${stillNoisy.size},"still_noisy":$stillNoisyJson,"load_passes":$loadPasses,"staging_total":$stagingTotal%.2f,"staging_secs":$stagingJson,"staging_pass_secs":$stagingPassJson,"query_staging":$queryStagingJson,"fixture_floor":$fixtureFloorJson,"queries":${dict(results)},"pass_secs":$perPass,"plan_sha":$planShaJson,"stream_phases":$phasesJson,"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"sf":"$sfDir"}""")
     catch { case scala.util.control.NonFatal(_) => () }
     // "queries" = the 15 slowest (the outlier-audit set); full map in the file
     val slowest = results.sortBy(-_._2).take(15)
-    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec%.2f,"cpus":$cpus,"n_queries":${results.size},"n_noisy":${noisy.size},"n_still_noisy":${stillNoisy.size},"staging_total":$stagingTotal%.2f,"load_passes":$loadPasses,"queries":${dict(slowest)},"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"detail":"${if (only.isEmpty) "BENCH_LOCAL.json" else "none"}","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec,"cpus":$cpus,"n_queries":${results.size},"n_noisy":${noisy.size},"n_still_noisy":${stillNoisy.size},"staging_total":$stagingTotal%.2f,"load_passes":$loadPasses,"queries":${dict(slowest)},"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"detail":"${if (only.isEmpty) "BENCH_LOCAL.json" else "none"}","sf":"$sfDir"}""")
     graft.ops.Fs.cleanupAppScratch(spark)
     spark.stop()
   }

@@ -234,11 +234,9 @@ object BpeOps {
     // AQE re-optimizes (and re-schedules) per shuffle stage — pure
     // overhead on these fixed vocabulary-sized 2-stage jobs, paid 2·steps
     // times; restore whatever the session had afterwards
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeBefore = s.conf.get(aqeKey, "true")
-    s.conf.set(aqeKey, "false")
-    try trainLoop(s, dir, steps)
-    finally s.conf.set(aqeKey, aqeBefore)
+    Staging.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
+      trainLoop(s, dir, steps)
+    }
   }
 
   /** Training with per-step wall times — the scale-rehearsal surface
@@ -250,11 +248,9 @@ object BpeOps {
   private[graft] def trainMergesTimed(s: SparkSession, dir: String,
       steps: Int): (Seq[(Long, String, String, Long)], Seq[Double]) = {
     val times = scala.collection.mutable.ArrayBuffer[Double]()
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeBefore = s.conf.get(aqeKey, "true")
-    s.conf.set(aqeKey, "false")
-    try (trainLoop(s, dir, steps, Some(times)), times.toSeq)
-    finally s.conf.set(aqeKey, aqeBefore)
+    Staging.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
+      (trainLoop(s, dir, steps, Some(times)), times.toSeq)
+    }
   }
 
   private def trainLoop(s: SparkSession, dir: String, steps: Int,
@@ -297,10 +293,9 @@ object BpeOps {
     val TRAIN_PARTS = math.max(1, math.min(
       s.sparkContext.defaultParallelism,
       ((vocabRows + 49999L) / 50000L).toInt))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", TRAIN_PARTS.toString)
-    try trainLoopBody(s, vocab0, steps, stepTimes, TRAIN_PARTS)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    Staging.withConf(s, "spark.sql.shuffle.partitions" -> TRAIN_PARTS.toString) {
+      trainLoopBody(s, vocab0, steps, stepTimes, TRAIN_PARTS)
+    }
   }
 
   /** The per-step loop as an RDD superstep kernel — the clusterPairs /

@@ -85,6 +85,9 @@ object CotQueries {
       .orderBy(col("id"))
   }
 
+  // per-run suffix of streamPollQ's snapshot log dir
+  private val pollRuns = new java.util.concurrent.atomic.AtomicInteger()
+
   /** E2E scheduled-poll fidelity — the reference's entire production loop
     * (task.ts:115-257) as ONE query: a fixture transport answers the EXACT
     * request the reference builds (URL template + apiKey/cacheBuster +
@@ -98,13 +101,18 @@ object CotQueries {
     * `arrival_idx * 2^32 + pos` seq encoding — the same winners as the
     * single-envelope fixture, which is why the oracle is `includesSql`
     * verbatim. The driver-side buffer is fixture-sized (the includes join
-    * keeps 3 rows); production uses `FeatureSink`, never a collect. */
+    * keeps 3 rows); production uses `FeatureSink`, never a collect.
+    * The snapshot log is app-scoped stream scratch with a per-run suffix
+    * (`fetchToLog` writes CREATE_NEW, so each run needs a fresh dir), and
+    * `Fs.cleanupAppScratch` removes it with the rest of the app's
+    * scratch. */
   private def streamPollQ(s: SparkSession): DataFrame = {
     import graft.adsbx.sources.{FetchRequest, SnapshotFetcher, SnapshotSource}
     import org.apache.spark.sql.streaming.Trigger
     val cfg = AdsbxConfig(includesFiltering = true, emergencyHostile = false,
       token = "fixture-token")
-    val log = java.nio.file.Files.createTempDirectory("graft_poll_log_").toString
+    val log = Fs.streamScratchDir(s, "graft_poll_log") +
+      s"_${pollRuns.incrementAndGet()}"
     val served = new java.util.concurrent.atomic.AtomicInteger()
     val http: FetchRequest => String = { req =>
       // transport-level fidelity gate: fail the whole query if the request
@@ -125,7 +133,7 @@ object CotQueries {
     val aircraft = Pipeline.fromEnvelopeJson(s, lines)
     val buf = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
     @volatile var outSchema: org.apache.spark.sql.types.StructType = null
-    val q = aircraft.writeStream
+    graft.streaming.StreamOps.runInstrumented(aircraft.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val out = Pipeline.run(batch, Fixtures.includesDf(batch.sparkSession), cfg)
           .withColumn("group_out", col("metadata.group"))
@@ -134,8 +142,7 @@ object CotQueries {
         buf.synchronized { buf ++= rows; outSchema = out.schema }
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()))
     require(outSchema != null, "stream produced no micro-batch")
     s.createDataFrame(s.sparkContext.parallelize(buf.toSeq, 1), outSchema)
       .orderBy(col("id"))

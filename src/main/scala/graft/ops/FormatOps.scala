@@ -22,20 +22,42 @@ object FormatOps {
     s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_fmt_${tag}_" +
       s.sparkContext.applicationId
 
+  private val concurrentCalls = new java.util.concurrent.atomic.AtomicInteger()
+
   /** Run independent Spark jobs concurrently and wait for all (guide
     * §2.6 — overlap independent jobs so each back-fills the others' write
-    * tails; the partitionEvolution / statsQuery discipline, generalized
-    * in the r17 optimization round). ONLY for jobs with no ordering
-    * dependency: version WRITES land in disjoint directories and only the
-    * commit-log pointer advances are ordered, so the writes overlap and
-    * the commits stay sequential at the call site. Failures rethrow. */
-  private def concurrently[A](jobs: (() => A)*): Seq[A] = {
-    import scala.concurrent.{Await, Future, blocking}
+    * tails; generalized in the r17 optimization round). ONLY for jobs
+    * with no ordering dependency: version WRITES land in disjoint
+    * directories and only the commit-log pointer advances are ordered, so
+    * the writes overlap and the commits stay sequential at the call site.
+    *
+    * The first failure, in whatever order the jobs finish, is rethrown at
+    * once, and the siblings' Spark jobs (running and not yet submitted)
+    * are cancelled through the call's own job group. There is no timeout:
+    * a fixed cap would fail a legitimately large write. */
+  private[ops] def concurrently[A](s: SparkSession)(jobs: (() => A)*): Seq[A] = {
+    import scala.concurrent.{Await, Future, Promise, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = jobs.map(j => Future(blocking(j())))
-    fs.map(Await.result(_, Duration.Inf))
+    val sc = s.sparkContext
+    val group = s"graft_concurrently_${concurrentCalls.incrementAndGet()}"
+    val fs = jobs.map(j => Future(blocking {
+      sc.setJobGroup(group, "FormatOps.concurrently")
+      try j() finally sc.clearJobGroup()
+    }))
+    val firstFailure = Promise[Seq[A]]()
+    fs.foreach(_.failed.foreach(firstFailure.tryFailure))
+    try Await.result(Future.firstCompletedOf(
+      Seq(Future.sequence(fs), firstFailure.future)), Duration.Inf)
+    catch { case e: Throwable => sc.cancelJobGroupAndFutureJobs(group); throw e }
   }
+
+  /** Two concurrent jobs of different result types. */
+  private[ops] def concurrently[A, B](s: SparkSession,
+      a: () => A, b: () => B): (A, B) =
+    concurrently[Either[A, B]](s)(() => Left(a()), () => Right(b())) match {
+      case Seq(Left(ra), Right(rb)) => (ra, rb)
+    }
 
   /** CSV sink + source: orders → CSV (header, explicit timestamp format) →
     * read back with an explicit schema → priority rollup. */
@@ -135,12 +157,9 @@ object FormatOps {
     * manifest builders (FooterStats) would see NULL bounds — the
     * data-skipping operators' entire premise. Scoped set/restore: query
     * factories run sequentially per session. */
-  private def withMicrosTimestamps[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
-    try body finally s.conf.set(key, prev)
-  }
+  private def withMicrosTimestamps[A](s: SparkSession)(body: => A): A =
+    Staging.withConf(s,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(body)
 
   private def zorderBits = 16
 
@@ -189,7 +208,7 @@ object FormatOps {
     val path = tmpDir(s, "evolve")
     val o = graft.Tables(s, dir, "orders")
     // the two schema generations are independent writes — overlap (§2.6)
-    concurrently(
+    concurrently(s)(
       () => o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.mode("overwrite").parquet(s"$path/v1"),
@@ -337,7 +356,7 @@ object FormatOps {
     val balLo = 2500.0
     // the two clustered fixtures (write + footer manifest + pruned read)
     // are independent — their jobs overlap (guide §2.6)
-    val both = concurrently(
+    val both = concurrently(s)(
       () => prunedAgg("string", col("c_name"),
         fs => graft.sources.FooterStats.binaryMinMax(s, fs, Seq("c_name")),
         m => m.filter(col("c_name_lo").isNull ||
@@ -372,7 +391,7 @@ object FormatOps {
     withMicrosTimestamps(s) {
       // both version writes derive from the source — overlap (§2.6),
       // commits ordered after both
-      concurrently(
+      concurrently(s)(
         () => orders.filter(col("o_orderdate") < cut)
           .repartitionByRange(16, col("o_orderdate"))
           .write.mode("overwrite").parquet(s"$path/data_v1"),
@@ -409,7 +428,7 @@ object FormatOps {
     def cut(d: String) = lit(d).cast("timestamp")
     // all four writes derive from the source table; only the pointer
     // advances are ordered (guide §2.6 — the timeTravel discipline)
-    concurrently(
+    concurrently(s)(
       () => orders.filter(col("o_orderdate") < cut("1997-01-01"))
         .write.mode("overwrite").parquet(s"$path/data_v1"),
       () => orders.filter(col("o_orderdate") < cut("1997-07-01"))
@@ -457,7 +476,7 @@ object FormatOps {
     val cut = lit("1997-07-01").cast("timestamp")
     // both snapshots derive from the source by predicate — writes overlap
     // (guide §2.6), commits stay ordered
-    concurrently(
+    concurrently(s)(
       () => orders.filter(col("o_orderdate") < cut).drop("o_orderdate")
         .write.mode("overwrite").parquet(s"$path/data_v1"),
       () => orders.filter(col("o_orderkey") % 13 =!= 0).drop("o_orderdate")
@@ -515,27 +534,17 @@ object FormatOps {
     // different partition layouts) and the commit needs both — submit
     // them concurrently so the second back-fills the first's write tail
     // (guide §2.6 overlap; the trainCurve metric/gradient discipline)
-    locally {
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val monthF = Future(blocking {
-        orders.filter(col("o_orderdate") < cut)
-          .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-          .repartition(col("o_month"))
-          .write.mode("overwrite").partitionBy("o_month")
-          .parquet(s"$path/seg_month")
-      })
-      val dayF = Future(blocking {
-        orders.filter(col("o_orderdate") >= cut)
-          .withColumn("o_day", date_format(col("o_orderdate"), "yyyy-MM-dd"))
-          .repartition(col("o_day"))
-          .write.mode("overwrite").partitionBy("o_day")
-          .parquet(s"$path/seg_day")
-      })
-      Await.result(monthF, Duration.Inf)
-      Await.result(dayF, Duration.Inf)
-    }
+    concurrently(s)(
+      () => orders.filter(col("o_orderdate") < cut)
+        .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
+        .repartition(col("o_month"))
+        .write.mode("overwrite").partitionBy("o_month")
+        .parquet(s"$path/seg_month"),
+      () => orders.filter(col("o_orderdate") >= cut)
+        .withColumn("o_day", date_format(col("o_orderdate"), "yyyy-MM-dd"))
+        .repartition(col("o_day"))
+        .write.mode("overwrite").partitionBy("o_day")
+        .parquet(s"$path/seg_day"))
     CommitLog.commitTables(path, 0,
       Seq("seg_month" -> s"$path/seg_month", "seg_day" -> s"$path/seg_day"))
     // query window spans the layout cut: [2001-04-01, 2001-08-02)
@@ -649,7 +658,7 @@ object FormatOps {
         .agg(count(lit(1)).as("mv_n"), sum(col("o_totalprice").cast(dec)).as("mv_sp"))
         .write.mode("overwrite").parquet(m)
     }
-    concurrently(
+    concurrently(s)(
       () => writePair(0, orders.filter(col("o_orderdate") < cut)),
       () => writePair(1, orders))
     Seq(0L, 1L).foreach { v =>
@@ -704,7 +713,7 @@ object FormatOps {
     // three independent write chains (guide §2.6): v1 snapshot → its MV
     // (sequential within the chain — the MV reads v1's files), the v2
     // snapshot, and the writer-recorded delta; only the commits are ordered
-    concurrently(
+    concurrently(s)(
       () => {
         // v1 snapshot + its materialized view (sum kept DECIMAL in the MV)
         o.filter(col("d") < cut).drop("d")
@@ -851,18 +860,14 @@ object FormatOps {
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
     // The three batch writes target disjoint directories and only the
     // COMMITS are ordered — run the write+stats jobs concurrently (guide
-    // §2.6: later jobs back-fill the earlier ones' write tails) and
+    // §2.6: later jobs back-fill the earlier ones' write tails), then
     // commit sequentially from the completed results.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = (0 until 3).map { i =>
-      val dataDir = s"$path/data_v${i + 1}"
-      dataDir -> Future(blocking { writeStatsData(dataDir,
-        orders.filter(pmod(col("o_orderkey"), lit(3)) === i)) })
-    }
-    writes.zipWithIndex.foreach { case ((dataDir, f), i) =>
-      commitStats(path, i.toLong, dataDir, Await.result(f, Duration.Inf))
+    val dataDirs = (1 to 3).map(v => s"$path/data_v$v")
+    val stats = concurrently(s)(dataDirs.zipWithIndex.map { case (d, i) =>
+      () => writeStatsData(d, orders.filter(pmod(col("o_orderkey"), lit(3)) === i))
+    }: _*)
+    dataDirs.zip(stats).zipWithIndex.foreach { case ((d, st), i) =>
+      commitStats(path, i.toLong, d, st)
     }
     statsAnswer(s, path)
   }
@@ -1044,7 +1049,7 @@ object FormatOps {
           r.getLong(5) >= usLo && r.getLong(4) < usHi)
     }
     // the two manifest builds are independent footer jobs — overlap (§2.6)
-    val sts = concurrently(() => stats(1L), () => stats(2L))
+    val sts = concurrently(s)(() => stats(1L), () => stats(2L))
     val (st1, st2) = (sts(0), sts(1))
     require(st2.length < st1.length,
       s"OPTIMIZE must compact: ${st1.length} files -> ${st2.length}")
@@ -1083,7 +1088,7 @@ object FormatOps {
     // The two version WRITES derive from the source table, not from each
     // other — only the pointer advances are ordered, so the writes overlap
     // (guide §2.6) and the commits stay sequential.
-    concurrently(
+    concurrently(s)(
       () => orders.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
         .write.mode("overwrite").parquet(s"$path/data_v1"),
       () => orders.write.mode("overwrite").parquet(s"$path/data_v2"))
@@ -1201,7 +1206,7 @@ object FormatOps {
     val path = tmpDir(s, "dppfact")
     val dimPath = tmpDir(s, "dppdim")
     // fact and dim writes are independent — overlap them (guide §2.6)
-    concurrently(
+    concurrently(s)(
       // repartition by the partition column first (one writer per month
       // directory — the partitionEvolution discipline)
       () => graft.Tables(s, dir, "orders")
@@ -1264,14 +1269,11 @@ object FormatOps {
     // under test); overlap their jobs (guide §2.6). B's CAS attempt runs
     // only after A's commit has landed, so the conflict stays guaranteed.
     val bStale = s"$path/merge_B_stale"
-    val vA = concurrently(
+    val (vA, _) = concurrently(s,
       () => MergeOps.mergeInto(s, path, upserts, "A"), // lands v2
-      () => {
-        // B's first attempt applies against stale v1 and must LOSE its CAS
-        MergeOps.applyMerge(s.read.parquet(staleBase.dataDir), deletes)
-          .write.mode("overwrite").parquet(bStale)
-        null
-      }).head.asInstanceOf[CommitLog.Commit]
+      // B's first attempt applies against stale v1 and must LOSE its CAS
+      () => MergeOps.applyMerge(s.read.parquet(staleBase.dataDir), deletes)
+        .write.mode("overwrite").parquet(bStale))
     val conflicted =
       try { CommitLog.commit(path, staleBase.version, bStale); false }
       catch { case _: CommitLog.CommitConflictException => true }
@@ -1382,7 +1384,7 @@ object FormatOps {
     val d2 = s"$path/data_00002"
     // the two file groups are independent writes (d2 is only REFERENCED
     // from commit v3) — overlap them (§2.6); commits stay ordered below
-    concurrently(
+    concurrently(s)(
       () => o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.mode("overwrite").parquet(d1),

@@ -8,7 +8,8 @@ import scala.collection.concurrent.TrieMap
   * across queries in one run (Bench/Verify execute the whole suite in one
   * SparkSession) and across the multiple join branches of a single query
   * (Catalyst does not dedupe common DataFrame subtrees, so an unpersisted
-  * intermediate referenced by two join sides is computed twice). */
+  * intermediate referenced by two join sides is computed twice). Also
+  * home of `withConf`, the one scoped SQL-conf override. */
 object Staging {
 
   private type Key = (SparkSession, String, String)
@@ -117,5 +118,20 @@ object Staging {
       cache.remove(k).flatMap(_.built).foreach(_.unpersist(blocking = true))
     }
     valueCache.keys.filter(_._1 eq s).foreach(valueCache.remove)
+  }
+
+  /** Run `body` with the given SQL confs set on `s`, then put every key
+    * back as it was — a key that was unset before is unset again — also
+    * when `body` throws. The one way an operator narrows a conf for its
+    * own run, so the caller's session is left as it was found. */
+  def withConf[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val set = s.conf.getAll // explicitly set keys only, no defaults
+    val prior = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 }

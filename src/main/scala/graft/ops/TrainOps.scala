@@ -248,11 +248,9 @@ object TrainOps {
     // sizes this to corpus bytes instead; the restore keeps the
     // session's width for everything downstream. (The per-STEP work no
     // longer plans SQL at all — see the kernel note in trainCurveBody.)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    Staging.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       trainCurveBody(s, f, B, STEPS, LR, LAMBDA, nDocs)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   private def trainCurveBody(s: SparkSession, f: DataFrame, nBuckets: Int,

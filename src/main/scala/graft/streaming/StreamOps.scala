@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import graft.ops.Staging.withConf
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Structured Streaming operators (SURVEY §2.9 streaming rows + E1).
@@ -41,45 +42,37 @@ object StreamOps {
   def drainPhaseRecords(): Seq[Map[String, Double]] =
     phaseLog.synchronized { val r = phaseLog.toList; phaseLog.clear(); r }
 
-  /** start() + awaitTermination() + phase accounting — every stream run
-    * in this object goes through here so the bench's phase breakdown
-    * covers the whole family. */
-  /** recentProgress retention for instrumented runs (r15, per advisor):
-    * Spark keeps only the last `numRecentProgressUpdates` progress
-    * events (default 100), so a stream with >100 micro-batches (e.g.
-    * maxFilesPerTrigger=1 at larger SFs) silently undercounted batch
-    * phase totals and n_batches — which INFLATED the derived setup_sec
-    * (wall − Σ triggerExecution) in BENCH_LOCAL.json. Raised before
-    * every instrumented start; recordPhases additionally publishes
-    * `progress_capped` so a capped record is self-describing instead of
-    * silently wrong. */
+  /** start() + awaitTermination() + phase accounting — the one way a
+    * stream is run to completion, so the bench's phase breakdown covers
+    * every stream query (this object's, the incremental merge and
+    * `cot_stream_poll`).
+    *
+    * recentProgress retention (r15): Spark keeps only the last
+    * `numRecentProgressUpdates` progress events (default 100), so a
+    * stream with >100 micro-batches (e.g. maxFilesPerTrigger=1 at larger
+    * SFs) silently undercounted batch phase totals and n_batches — which
+    * INFLATED the derived setup_sec (wall − Σ triggerExecution) in
+    * BENCH_LOCAL.json. The run raises it to at least PROGRESS_RETENTION
+    * and restores the session's own setting afterwards; the record also
+    * publishes `progress_capped` so a capped record is self-describing
+    * instead of silently wrong. */
   private val PROGRESS_RETENTION = 10000
 
-  private def raiseProgressRetention(
-      spark: org.apache.spark.sql.SparkSession): Unit = {
+  private[graft] def runInstrumented(w: DataStreamWriter[Row]): StreamingQuery = {
+    val spark = SparkSession.active
     val k = "spark.sql.streaming.numRecentProgressUpdates"
-    if (spark.conf.getOption(k).map(_.toInt).getOrElse(100)
-        < PROGRESS_RETENTION)
-      spark.conf.set(k, PROGRESS_RETENTION.toString)
+    val retention = math.max(PROGRESS_RETENTION, spark.conf.get(k).toInt)
+    withConf(spark, k -> retention.toString) {
+      val t0 = System.nanoTime()
+      val q = w.start()
+      q.awaitTermination()
+      recordPhases(q, (System.nanoTime() - t0) / 1e9, retention)
+      q
+    }
   }
 
-  private[streaming] def runInstrumented(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    raiseProgressRetention(org.apache.spark.sql.SparkSession.active)
-    val t0 = System.nanoTime()
-    val q = w.start()
-    q.awaitTermination()
-    recordPhases(q, (System.nanoTime() - t0) / 1e9)
-    q
-  }
-
-  /** Phase accounting for runs that start and await separately (the
-    * incremental-merge runner): wall must cover start→termination. */
-  private[streaming] def recordPhases(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      wall: Double): Unit = {
+  private def recordPhases(q: StreamingQuery, wall: Double,
+      retention: Int): Unit = {
     import scala.jdk.CollectionConverters._
     val agg = scala.collection.mutable.Map.empty[String, Double]
       .withDefaultValue(0.0)
@@ -89,11 +82,6 @@ object StreamOps {
     // retention-cap tripwire: progs.length at the buffer limit means
     // earlier batches were evicted — phase totals are partial and the
     // derived setup_sec is an overestimate. Published, never guessed at.
-    val retention =
-      try q.sparkSession.conf
-        .getOption("spark.sql.streaming.numRecentProgressUpdates")
-        .map(_.toInt).getOrElse(100)
-      catch { case scala.util.control.NonFatal(_) => 100 }
     val rec = Map(
       "wall_sec" -> wall,
       "n_batches" -> progs.length.toDouble,
@@ -155,8 +143,6 @@ object StreamOps {
     // 2 → 25.4, 4 → 15.0, 8 → 18.2, 16 → 22.9 — the 4-wide setting is
     // the measured optimum, state-store count and per-task overhead
     // dominate above it, lost parallelism below.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
     // Whole-stage codegen OFF for the micro-batch run (r13, measured):
     // event-time watermark values are baked into the generated code as
     // literals, so EVERY batch of a watermarked query is a codegen cache
@@ -173,25 +159,20 @@ object StreamOps {
     // The state-store provider is the session's own: r17 measured RocksDB
     // 1.6× slower on the heavy-6 (per-batch native open/commit against
     // KB-scale state; its win is state that outgrows the executor heap).
-    val prevCg = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     // resolve the result (analysis is eager, so the frame keeps the sink's
     // relation), then UNREGISTER the sink's temp view, also when the query
     // fails: every stream run creates a fresh sink table, and a long
     // session that never drops the names pins hundreds of buffered result
     // tables on the heap — the returned frame alone keeps this one alive
     // until the caller drops it
-    try {
+    try withConf(spark, "spark.sql.shuffle.partitions" -> stateParts.toString,
+        "spark.sql.codegen.wholeStage" -> "false") {
       runInstrumented(streamed.writeStream
         .format("memory").queryName(name)
         .outputMode(outputMode)
         .trigger(Trigger.AvailableNow()))
       spark.table(name)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevCg)
-      spark.catalog.dropTempView(name)
-    }
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** Streaming hourly tumbling-window aggregation in APPEND mode with a
@@ -960,7 +941,20 @@ object StreamOps {
     * show through — the final state equals the batch aggregate over all
     * input, which is what the oracle checks. */
   def startIncrementalMerge(events: DataFrame, root: String,
-      trigger: Trigger): (org.apache.spark.sql.streaming.StreamingQuery, () => DataFrame) = {
+      trigger: Trigger): (StreamingQuery, () => DataFrame) = {
+    val (w, readState) = incrementalMergeWriter(events, root)
+    (w.trigger(trigger).start(), readState)
+  }
+
+  def runIncrementalMerge(events: DataFrame, root: String): DataFrame = {
+    val (w, readState) = incrementalMergeWriter(events, root)
+    runInstrumented(w.trigger(Trigger.AvailableNow()))
+    readState()
+  }
+
+  /** The merge's foreachBatch writer (trigger unset) and its state reader. */
+  private def incrementalMergeWriter(events: DataFrame, root: String)
+      : (DataStreamWriter[Row], () => DataFrame) = {
     val spark = events.sparkSession
     val emptyState = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -984,9 +978,8 @@ object StreamOps {
     def readVersion(v: Long): DataFrame =
       if (v == 0L) emptyState else spark.read.parquet(s"$root/v$v")
     def readState(): DataFrame = readVersion(versions().lastOption.getOrElse(0L))
-    val q = events.writeStream
+    val w = events.writeStream
       .outputMode("update")
-      .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val agg = batch.groupBy(col("user_id"))
           .agg(count(lit(1)).as("n"),
@@ -1001,17 +994,7 @@ object StreamOps {
           graft.ops.Fs.deleteRecursively(new java.io.File(s"$root/v$v"))
         }
       }
-      .start()
-    (q, readState)
-  }
-
-  def runIncrementalMerge(events: DataFrame, root: String): DataFrame = {
-    raiseProgressRetention(events.sparkSession)
-    val t0 = System.nanoTime()
-    val (q, readState) = startIncrementalMerge(events, root, Trigger.AvailableNow())
-    q.awaitTermination()
-    recordPhases(q, (System.nanoTime() - t0) / 1e9)
-    readState()
+    (w, readState)
   }
 
   private def incrementalMergeQ(s: SparkSession, dir: String): DataFrame = {
@@ -1055,10 +1038,7 @@ object StreamOps {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         graft.ops.Exact.sumD(col("value")).as("sum_value"))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try runVersionedSink(agg, table)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    withConf(s, "spark.sql.shuffle.partitions" -> "4")(runVersionedSink(agg, table))
     s.read.parquet(graft.ops.CommitLog.latest(table).get.dataDir)
       .orderBy(col("user_id"))
   }
@@ -1195,9 +1175,7 @@ object StreamOps {
         org.apache.spark.sql.types.StructField("n",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("sp", dec))))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withConf(s, "spark.sql.shuffle.partitions" -> "4") {
       runInstrumented(s.readStream.schema(changeSchema)
         .option("recursiveFileLookup", "true").option("maxFilesPerTrigger", 1)
         .parquet(s"$feedPath/_changes")
@@ -1241,8 +1219,7 @@ object StreamOps {
           ()
         }
         .trigger(Trigger.AvailableNow()))
-      ()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val versions = CommitLog.entries(mv)
     require(versions.size == 4,
       s"4 change commits must yield 4 MV versions, got ${versions.size}")
@@ -1299,9 +1276,7 @@ object StreamOps {
         org.apache.spark.sql.types.StructField("n",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("sp", graft.ops.Exact.dec))))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withConf(s, "spark.sql.shuffle.partitions" -> "4") {
       runInstrumented(s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .writeStream.outputMode("append")
@@ -1344,8 +1319,7 @@ object StreamOps {
           ()
         }
         .trigger(Trigger.AvailableNow()))
-      ()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val versions = CommitLog.entries(txn)
     require(versions.size >= 2,
       s"the txn sink must publish per-batch transactions, got ${versions.size}")
@@ -1423,12 +1397,10 @@ object StreamOps {
         graft.ops.Exact.sumD(col("r.o_totalprice")).as("sum_price"),
         max(col("version")).as("last_version"))
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = try {
+    val q = withConf(s, "spark.sql.shuffle.partitions" -> "4") {
       runInstrumented(agg.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()))
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val fedBatches = q.recentProgress.count(_.numInputRows > 0)
     require(fedBatches == 4,
       s"4 commits at maxVersionsPerTrigger=1 must arrive as 4 micro-batches, got $fedBatches")
@@ -1479,9 +1451,7 @@ object StreamOps {
       .write.mode("overwrite").parquet(stage)
     val schema = s.read.parquet(stage).schema
     val rule = col("value") >= 0
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withConf(s, "spark.sql.shuffle.partitions" -> "4") {
       runInstrumented(s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .writeStream.outputMode("append")
@@ -1512,8 +1482,7 @@ object StreamOps {
           ()
         }
         .trigger(Trigger.AvailableNow()))
-      ()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val chunks = CommitLog.entries(root)
       .flatMap(c => CommitLog.payloadDirs(c.dataDir))
     val published = s.read.parquet(chunks: _*)
@@ -1569,9 +1538,7 @@ object StreamOps {
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val perBatch = scala.collection.concurrent.TrieMap
       .empty[Long, Array[(String, Long, Long)]]
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withConf(s, "spark.sql.shuffle.partitions" -> "4") {
       runInstrumented(docs.writeStream.outputMode("append")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           val scored = TrainOps.scoreWithModel(batch.toDF(), "doc_id", "text", m, c)
@@ -1586,8 +1553,7 @@ object StreamOps {
           ()
         }
         .trigger(Trigger.AvailableNow()))
-      ()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val totals = perBatch.values.flatten
       .groupBy(_._1).toSeq
       .map { case (src, rows) =>

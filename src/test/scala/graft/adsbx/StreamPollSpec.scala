@@ -32,4 +32,16 @@ class StreamPollSpec extends SparkSpec {
     assert(byHex("a00002").getAs[String]("flight") == null)
     assert(parsed.count() == Fixtures.aircraft.size)
   }
+
+  test("the poll loop leaves a stream phase record like every stream run") {
+    graft.streaming.StreamOps.drainPhaseRecords()
+    graft.ops.CotQueries.queries("cot_stream_poll")(spark, "").count()
+    val recs = graft.streaming.StreamOps.drainPhaseRecords()
+    assert(recs.size == 1, s"expected one phase record, got $recs")
+    val r = recs.head
+    assert(Seq("wall_sec", "n_batches", "progress_capped", "setup_sec",
+      "batch_triggerExecution", "batch_addBatch").forall(r.contains),
+      s"record keys: ${r.keys}")
+    assert(r("n_batches") >= 1.0 && r("progress_capped") == 0.0)
+  }
 }

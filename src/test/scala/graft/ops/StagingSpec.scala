@@ -67,4 +67,29 @@ class StagingSpec extends SparkSpec {
       assert(builds.get == 2)
     } finally Staging.clear(spark)
   }
+
+  test("withConf restores a set key, unsets an unset key, also on throw") {
+    val set = "spark.sql.shuffle.partitions"
+    val unset = "spark.sql.parquet.outputTimestampType"
+    val saved = spark.conf.get(set)
+    val savedUnset = spark.conf.getAll.get(unset)
+    spark.conf.set(set, "3")
+    spark.conf.unset(unset)
+    def state = (spark.conf.get(set), spark.conf.getAll.get(unset))
+    try {
+      val inside = Staging.withConf(spark, set -> "7",
+          unset -> "TIMESTAMP_MICROS")(state)
+      assert(inside == (("7", Some("TIMESTAMP_MICROS"))))
+      assert(state == (("3", None)))
+      intercept[IllegalStateException] {
+        Staging.withConf(spark, set -> "7", unset -> "TIMESTAMP_MICROS") {
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(state == (("3", None)))
+    } finally {
+      spark.conf.set(set, saved)
+      savedUnset.foreach(spark.conf.set(unset, _))
+    }
+  }
 }

@@ -42,27 +42,54 @@ class StreamHygieneSpec extends SparkSpec {
     } finally keys.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  test("stream runs restore numRecentProgressUpdates, also when the query fails") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val k = "spark.sql.streaming.numRecentProgressUpdates"
+    val saved = spark.conf.getAll.get(k)
+    val ev = StreamOps.eventsStream(spark, dir)
+    try {
+      // unset before the run stays unset after it
+      spark.conf.unset(k)
+      StreamOps.runToMemory(ev.select("event_id"), "append").count()
+      assert(spark.conf.getAll.get(k).isEmpty)
+      // a value the run raises is put back, also by a failing run
+      spark.conf.set(k, "50")
+      intercept[Exception] { StreamOps.runToMemory(
+        ev.select(raise_error(lit("boom")).cast("string")), "append") }
+      assert(spark.conf.getAll.get(k).contains("50"))
+    } finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
   test("cleanupAppScratch empties every scratch root of this app") {
     val appId = spark.sparkContext.applicationId
-    // materialize scratch in all three classes: a stream checkpoint
-    // (tmpfs), a stream scratch dir, and a staged serve index (/tmp)
-    graft.SparkEntry.queries("stream_hourly_window")(spark, dir).count()
-    new java.io.File(
-      graft.ops.Fs.streamScratchDir(spark, "graft_hygiene")).mkdirs()
-    graft.SparkEntry.queries("text_hybrid_rrf")(spark, dir).count()
     val roots = Seq(
       new java.io.File("/dev/shm"),
       new java.io.File(System.getProperty("java.io.tmpdir", "/tmp")))
       .filter(_.isDirectory)
-    def mine(): Seq[String] = roots.flatMap { base =>
+    def scratch(): Set[String] = roots.flatMap { base =>
       Option(base.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-        .map(_.getName)
-        .filter(n => n.startsWith("graft_") && n.contains(appId))
-    }
+        .map(_.getName).filter(_.startsWith("graft_"))
+    }.toSet
+    def mine(): Set[String] = scratch().filter(_.contains(appId))
+    val before = scratch()
+    // materialize scratch in all classes: a stream checkpoint (tmpfs), a
+    // stream scratch dir, a staged serve index (/tmp) and the poll loop's
+    // snapshot log
+    graft.SparkEntry.queries("stream_hourly_window")(spark, dir).count()
+    new java.io.File(
+      graft.ops.Fs.streamScratchDir(spark, "graft_hygiene")).mkdirs()
+    graft.SparkEntry.queries("text_hybrid_rrf")(spark, dir).count()
+    graft.SparkEntry.queries("cot_stream_poll")(spark, dir).count()
     assert(mine().nonEmpty, "expected live scratch dirs before cleanup")
     graft.ops.Fs.cleanupAppScratch(spark)
     assert(mine().isEmpty,
       s"scratch survived cleanupAppScratch: ${mine().mkString(", ")}")
+    // nothing this test created may survive — a scratch name without the
+    // app id escapes cleanup (names carrying another app's id belong to
+    // another JVM sharing the roots)
+    val otherApp = "local-\\d+".r
+    val leaked = (scratch() -- before).filter(n => otherApp.findFirstIn(n).isEmpty)
+    assert(leaked.isEmpty, s"scratch escaped cleanupAppScratch: ${leaked.mkString(", ")}")
     // the staged index PATH is still cached in Staging but its files are
     // gone — drop the staged values so later suites rebuild cleanly
     graft.ops.Staging.clear(spark)
