@@ -122,9 +122,6 @@ object SparkEntry {
     // localCheckpoint at plan build (multiple consumers — Catalyst does
     // not dedupe common subtrees)
     "rel_freq_itemsets", "rel_basket_lift",
-    // mutual-reinforcement supersteps localCheckpoint per half-step (the
-    // raw frame feeds both its total and the node join)
-    "graph_hits",
     // MM iteration: per-step localCheckpoint cuts the doubling plan tree
     // (the strength vector feeds BOTH sides of the pair join), so the
     // item-sized steps execute at plan build

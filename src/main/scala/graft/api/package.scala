@@ -424,7 +424,7 @@ package object api {
     def assortativity(): DataFrame = ops.GraphOps.assortativity(df)
 
     /** HITS hub/authority scores over this directed (src, dst) edge
-      * frame — see graph_hits. EAGER: supersteps run at call. */
+      * frame — see graph_hits. */
     def hits(iters: Int = 4): DataFrame = ops.GraphOps.hits(df, iters)
 
     /** Cramér's V association strength between two categoricals over

@@ -36,8 +36,12 @@ object Fs {
     * — all suffixed with the applicationId) — called by the harness mains
     * before session stop so repeated runs in one container don't
     * accumulate dead state in RAM-backed storage or /tmp. */
-  def cleanupAppScratch(s: org.apache.spark.sql.SparkSession): Unit = {
-    val appId = s.sparkContext.applicationId
+  def cleanupAppScratch(s: org.apache.spark.sql.SparkSession): Unit =
+    cleanupAppScratch(s.sparkContext.applicationId)
+
+  /** `cleanupAppScratch` by application id — for a JVM shutdown hook,
+    * which may run after Spark's own hook has stopped the session. */
+  def cleanupAppScratch(appId: String): Unit = {
     Seq(tmpfsBase(), System.getProperty("java.io.tmpdir", "/tmp"))
       .distinct.map(new java.io.File(_)).foreach { base =>
         Option(base.listFiles()).getOrElse(Array.empty)

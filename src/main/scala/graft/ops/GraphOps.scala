@@ -109,82 +109,25 @@ object GraphOps {
     * reinforcement pagerank's single score can't separate.
     *
     * Exactness (the pagerank fixed-point discipline): scores live in
-    * integer 1e-12 units; each half-step is one edge join + exact BIGINT
-    * sum, and the sum-normalization is integer division by
-    * (total div SCALE) — floor-deterministic in both engines, guarded to
-    * ≥ 1 so a sub-unit total can never divide by zero (Spark nulls,
-    * DuckDB throws). Half-step sums and totals accumulate in
-    * DECIMAL(38,0) (matching DuckDB's HUGEINT sum-of-BIGINT): the first
-    * half-step totals E·1e12, which wraps BIGINT past ~9.2M edges — the
-    * decimal sum is exact, and the normalized per-node scores stay
-    * ≤ HSCALE-sized BIGINTs. Per iteration: two node-keyed
-    * shuffles + two broadcast 1-row totals; the staged edge table is the
-    * only corpus-sized input. The oracle unrolls all iterations as a
-    * MATERIALIZED CTE ladder.
+    * integer 1e-12 units; each half-step sums the edge contributions
+    * exactly, and the sum-normalization is the truncating integral
+    * divide by max(total div HSCALE, 1) on non-negative values —
+    * floor-deterministic in both engines, the guard keeping a sub-unit
+    * total from dividing by zero (Spark nulls, DuckDB throws). Half-step
+    * sums and totals accumulate in BigInteger, the exactness class of
+    * DuckDB's HUGEINT sum-of-BIGINT: the first half-step totals E·1e12,
+    * which would wrap a BIGINT past ~9.2M edges, and the normalized
+    * per-node scores stay ≤ HSCALE-sized longs. The oracle unrolls all
+    * iterations as a MATERIALIZED CTE ladder.
     *
-    * EAGER (SparkEntry.eagerQueries): the per-iteration normalizing
-    * totals run RDD jobs at plan build.
-    *
-    * r16 rework (optimization round): the supersteps used to run as a
-    * Catalyst ladder — per iteration two edge joins, two node left-joins,
-    * two broadcast totals and FIVE eager localCheckpoints, each a fresh
-    * tiny plan whose PLANNING cost dwarfed its execution (the
-    * text_bpe_artifact finding; the query spent ~2.5 s on a 2k-node
-    * graph). The iteration now runs as a co-partitioned RDD superstep
-    * kernel — the layout the pagerank scale note above prescribes
-    * ("hash-partition edges and ranks on the join key once and every
-    * iteration's join is exchange-free on the edge side"): edges are
-    * partitioned by src and by dst ONCE, score vectors keep the same
-    * partitioner, so each half-step is one narrow join + ONE shuffle
-    * (the dst/src-keyed sum) + a narrow normalize. State stays
-    * node-distributed (nothing node-sized ever collects to the driver).
-    * Arithmetic is bit-identical to the ladder (GraphOpsSpec pins the
-    * shapes, the oracle replays the same CTE ladder): half-step sums and
-    * totals accumulate in BigInteger — the same exactness class as the
-    * DECIMAL(38,0) sums they replace (a BIGINT sum would wrap silently
-    * past ~9.2M edges; DuckDB's HUGEINT and BigInteger both keep going) —
-    * and the normalization is the same truncating integral divide by
-    * max(total div HSCALE, 1) on non-negative values. */
-  def hits(e0: DataFrame, iters: Int = HITS_ITERS): DataFrame =
-    hitsKernel(e0, iters, forcedParts = None)
-
-  /** -0.0 → 0.0 for boxed float/double node keys (java equality/hashing
-    * splits the two where SQL unifies them; NaNs already unify). An object
-    * of its own, so the kernels' closures that call it capture no GraphOps. */
-  private object NodeKey {
-    def unifyZero(v: Any): Any = v match {
-      case d: java.lang.Double if d.doubleValue == 0.0d =>
-        java.lang.Double.valueOf(0.0d)
-      case f: java.lang.Float if f.floatValue == 0.0f =>
-        java.lang.Float.valueOf(0.0f)
-      case x => x
-    }
-  }
-
-  /** `hits` with an explicit kernel width — test hook so the distributed
-    * superstep path stays covered (and provably equal to the
-    * single-partition fast path) on inputs whose size rule would pick
-    * one partition. */
-  private[graft] def hitsKernel(e0: DataFrame, iters: Int,
-      forcedParts: Option[Int]): DataFrame = {
+    * The kernel runs in one task, with memory linear in the edge count. */
+  def hits(e0: DataFrame, iters: Int = HITS_ITERS): DataFrame = {
     // iters = 0 would return the un-normalized initial hub vector and a
     // null authority frame — reject loudly instead of NPEing
     require(iters >= 1, s"hits needs at least 1 iteration (got $iters)")
     val s = e0.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eRdd = e0.select(col("src"), col("dst")).rdd
       .map(r => (NodeKey.unifyZero(r.get(0)), NodeKey.unifyZero(r.get(1))))
-    // partition count follows the input's SIZE, not the session's task
-    // width (guide §2: fewer, larger partitions) — a 28k-edge bench graph
-    // in 32 one-row-ish tasks pays pure scheduling per half-step, while a
-    // 100 TB edge list keeps its scan width. Catalyst's size estimate for
-    // the staged (cached) edge table is bytes-accurate once materialized
-    // and a parquet-stat estimate before that — either is the right order
-    // of magnitude for a 16 MB/partition target.
-    val bytesEst = e0.queryExecution.optimizedPlan.stats.sizeInBytes
-    val sizeParts = (bytesEst / (16L << 20)).toLong + 1L
-    val part = new org.apache.spark.HashPartitioner(forcedParts.getOrElse(
-      math.max(1L, math.min(eRdd.getNumPartitions.toLong, sizeParts)).toInt))
     val nodeType = e0.schema("src").dataType
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", nodeType, true),
@@ -198,122 +141,70 @@ object GraphOps {
         org.apache.spark.sql.types.DoubleType, true)))
     val one = java.math.BigInteger.ONE
     val hscaleBi = java.math.BigInteger.valueOf(HSCALE)
-    // SINGLE-PARTITION FAST PATH (r17 optimization round — the
-    // clusterPairs union-find discipline, gated on the SAME size rule as
-    // the kernel width): at p == 1 the distributed ladder is ~9 sequential
-    // one-task jobs per run whose cost is pure scheduling (measured
-    // ~1.8 s for a 28k-edge graph); the whole iteration runs inside ONE
-    // task instead. Arithmetic is bit-identical by construction: the same
-    // BigInteger half-step sums (integer adds are order-free) and the
-    // same truncating normalize divide, with java HashMap key semantics
-    // equal to the shuffled path's boxed-key equality. A graph whose
-    // size estimate exceeds one 16 MB partition keeps the distributed
-    // superstep kernel below.
-    if (part.numPartitions == 1) {
-      val nIters = iters
-      val rows = eRdd.coalesce(1).mapPartitions { it =>
-        import java.math.BigInteger
-        val edges = it.toArray
-        val nodes = new java.util.LinkedHashSet[Any]()
-        edges.foreach { case (sv, dv) => nodes.add(sv); nodes.add(dv) }
-        def normalize(raw: java.util.HashMap[Any, BigInteger])
-            : java.util.HashMap[Any, java.lang.Long] = {
-          var t = BigInteger.ZERO
-          val vi = raw.values.iterator()
-          while (vi.hasNext) t = t.add(vi.next())
-          val tdiv = t.divide(hscaleBi).max(one)
-          val out = new java.util.HashMap[Any, java.lang.Long]()
-          val ni = nodes.iterator()
-          while (ni.hasNext) {
-            val n = ni.next()
-            out.put(n, raw.getOrDefault(n, BigInteger.ZERO)
-              .divide(tdiv).longValueExact())
-          }
-          out
-        }
-        var h = new java.util.HashMap[Any, java.lang.Long]()
-        val n0 = nodes.iterator()
-        while (n0.hasNext) h.put(n0.next(), HSCALE)
-        var a: java.util.HashMap[Any, java.lang.Long] = null
-        for (_ <- 1 to nIters) {
-          val araw = new java.util.HashMap[Any, BigInteger]()
-          edges.foreach { case (sv, dv) =>
-            araw.merge(dv, BigInteger.valueOf(h.get(sv)), _.add(_))
-          }
-          a = normalize(araw)
-          val hraw = new java.util.HashMap[Any, BigInteger]()
-          edges.foreach { case (sv, dv) =>
-            hraw.merge(sv, BigInteger.valueOf(a.get(dv)), _.add(_))
-          }
-          h = normalize(hraw)
-        }
-        val out = Seq.newBuilder[org.apache.spark.sql.Row]
+    // java HashMap key semantics equal SQL grouping on the boxed keys
+    // (±0 unified above); integer adds are order-free, so the sums do not
+    // depend on edge order
+    val rows = eRdd.coalesce(1).mapPartitions { it =>
+      import java.math.BigInteger
+      val edges = it.toArray
+      val nodes = new java.util.LinkedHashSet[Any]()
+      edges.foreach { case (sv, dv) => nodes.add(sv); nodes.add(dv) }
+      def normalize(raw: java.util.HashMap[Any, BigInteger])
+          : java.util.HashMap[Any, java.lang.Long] = {
+        var t = BigInteger.ZERO
+        val vi = raw.values.iterator()
+        while (vi.hasNext) t = t.add(vi.next())
+        val tdiv = t.divide(hscaleBi).max(one)
+        val out = new java.util.HashMap[Any, java.lang.Long]()
         val ni = nodes.iterator()
         while (ni.hasNext) {
           val n = ni.next()
-          val hs = h.get(n).longValue
-          val as_ = a.get(n).longValue
-          out += org.apache.spark.sql.Row(n, hs, as_,
-            hs.toDouble / HSCALE.toDouble, as_.toDouble / HSCALE.toDouble)
+          out.put(n, raw.getOrDefault(n, BigInteger.ZERO)
+            .divide(tdiv).longValueExact())
         }
-        out.result().iterator
+        out
       }
-      return s.createDataFrame(rows, schema)
-    }
-    val bySrc = eRdd.partitionBy(part).persist(lvl)          // (src, dst)
-    val byDst = eRdd.map(_.swap).partitionBy(part).persist(lvl) // (dst, src)
-    // node set with the SAME partitioner (one shuffle, kept co-located)
-    val nodes = eRdd.flatMap(t => Iterator(t._1, t._2))
-      .map((_, ())).reduceByKey(part, (a, _) => a).persist(lvl)
-    def normalize(raw: org.apache.spark.rdd.RDD[(Any, java.math.BigInteger)])
-        : org.apache.spark.rdd.RDD[(Any, Long)] = {
-      // total: one job (also materializes raw's cache); fold — not
-      // reduce — so an empty edge list yields an empty result, not a
-      // driver exception
-      val t = raw.map(_._2).fold(java.math.BigInteger.ZERO)(_.add(_))
-      val tdiv = t.divide(hscaleBi).max(one)
-      // coalesce(raw, 0) div max(total div HSCALE, 1) — narrow join
-      // (nodes and raw share the partitioner)
-      nodes.leftOuterJoin(raw, part).mapValues { case (_, rOpt) =>
-        rOpt.getOrElse(java.math.BigInteger.ZERO).divide(tdiv)
-          .longValueExact()
-      }.persist(lvl)
-    }
-    var h = nodes.mapValues(_ => HSCALE).persist(lvl)
-    var a: org.apache.spark.rdd.RDD[(Any, Long)] = null
-    for (_ <- 1 to iters) {
-      val araw = bySrc.join(h, part) // narrow: co-partitioned
-        .map { case (_, (dst, hs)) =>
-          (dst, java.math.BigInteger.valueOf(hs)) }
-        .reduceByKey(part, _.add(_)).persist(lvl) // the half-step shuffle
-      val aNew = normalize(araw)
-      val hraw = byDst.join(aNew, part)
-        .map { case (_, (src, as_)) =>
-          (src, java.math.BigInteger.valueOf(as_)) }
-        .reduceByKey(part, _.add(_)).persist(lvl)
-      val hNew = normalize(hraw)
-      // the totals above already materialized araw/hraw; the normalized
-      // vectors materialize at the next half-step's total (or the final
-      // assembly) — release superseded state once its successor is built
-      h.unpersist(blocking = false)
-      if (a != null) a.unpersist(blocking = false)
-      araw.unpersist(blocking = false)
-      hraw.unpersist(blocking = false)
-      h = hNew
-      a = aNew
-    }
-    // materialize the final score join, then release every kernel cache
-    // (r17 — the LPA discipline: the co-partitioned edge/node RDDs and
-    // the final vectors were persisted for the run and never freed; a
-    // long session leaked one graph-sized cache set per invocation)
-    val scored = h.join(a, part).persist(lvl)
-    scored.count()
-    Seq(bySrc, byDst, nodes, h, a).foreach(_.unpersist(blocking = false))
-    val rows = scored.map { case (node, (hs, as_)) =>
-      org.apache.spark.sql.Row(node, hs, as_,
-        hs.toDouble / HSCALE.toDouble, as_.toDouble / HSCALE.toDouble)
+      var h = new java.util.HashMap[Any, java.lang.Long]()
+      val n0 = nodes.iterator()
+      while (n0.hasNext) h.put(n0.next(), HSCALE)
+      var a: java.util.HashMap[Any, java.lang.Long] = null
+      for (_ <- 1 to iters) {
+        val araw = new java.util.HashMap[Any, BigInteger]()
+        edges.foreach { case (sv, dv) =>
+          araw.merge(dv, BigInteger.valueOf(h.get(sv)), _.add(_))
+        }
+        a = normalize(araw)
+        val hraw = new java.util.HashMap[Any, BigInteger]()
+        edges.foreach { case (sv, dv) =>
+          hraw.merge(sv, BigInteger.valueOf(a.get(dv)), _.add(_))
+        }
+        h = normalize(hraw)
+      }
+      val out = Seq.newBuilder[org.apache.spark.sql.Row]
+      val ni = nodes.iterator()
+      while (ni.hasNext) {
+        val n = ni.next()
+        val hs = h.get(n).longValue
+        val as_ = a.get(n).longValue
+        out += org.apache.spark.sql.Row(n, hs, as_,
+          hs.toDouble / HSCALE.toDouble, as_.toDouble / HSCALE.toDouble)
+      }
+      out.result().iterator
     }
     s.createDataFrame(rows, schema)
+  }
+
+  /** -0.0 → 0.0 for boxed float/double node keys (java equality/hashing
+    * splits the two where SQL unifies them; NaNs already unify). An object
+    * of its own, so the kernels' closures that call it capture no GraphOps. */
+  private object NodeKey {
+    def unifyZero(v: Any): Any = v match {
+      case d: java.lang.Double if d.doubleValue == 0.0d =>
+        java.lang.Double.valueOf(0.0d)
+      case f: java.lang.Float if f.floatValue == 0.0f =>
+        java.lang.Float.valueOf(0.0f)
+      case x => x
+    }
   }
 
   private def hitsQ(s: SparkSession, dir: String): DataFrame =
@@ -640,56 +531,23 @@ object GraphOps {
     * labels after exactly `rounds` synchronous updates" (LPA has no
     * guaranteed fixpoint — labels can 2-cycle on bipartite structure —
     * so a convergence contract would be wrong; fixed-round is how
-    * deterministic LPA is specified). Per round: one join of the label
-    * table to the staged edge list + one (node, label) count + one
-    * argmax window over that aggregate — two key-space shuffles, the
-    * Pregel shape. Every und-node has degree >= 1, so the new label
-    * table covers all nodes. */
-  def labelPropagate(e: DataFrame, rounds: Int): DataFrame =
-    lpaKernel(e, rounds, forcedParts = None)
-
-  /** `labelPropagate` with an explicit kernel width — test hook keeping
-    * the distributed superstep path covered (and equal to the
-    * single-partition fast path) on small inputs. */
-  private[graft] def lpaKernel(e: DataFrame, rounds: Int,
-      forcedParts: Option[Int]): DataFrame = {
-    // RDD superstep kernel (r16 optimization round — the hits discipline
-    // directly above): the DataFrame round loop planned three fresh
-    // Catalyst plans and eagerly localCheckpointed the label table EVERY
-    // round — fixed per-round cost that dwarfed the KB-scale data work at
-    // bench size. The kernel plans once; each round is one narrow
-    // co-partitioned join plus two keyed exact reductions ((u,lbl) count,
-    // then per-u argmax), and the whole ladder executes as ONE job when
-    // the result materializes. Width follows the edge table's size, not
-    // the session (16 MB/partition target — a 28k-edge bench graph runs
-    // one task per stage, a 100 TB edge list keeps its width). Semantics
-    // and values unchanged: argmax is (count desc, label asc) under
-    // Catalyst's own interpreted ordering (binary UTF8String order — the
-    // window's lbl.asc, and DuckDB's), counts are exact longs, and SQL
-    // join-on-v null semantics are reproduced (null-v pairs deliver no
-    // label; null nodes still receive labels from their neighbors).
+    * deterministic LPA is specified). The argmax is (count desc, label
+    * asc) under Catalyst's own interpreted ordering (binary UTF8String
+    * order — the window's lbl.asc, and DuckDB's), counts are exact longs,
+    * and SQL join-on-v null semantics hold: a null-v pair delivers no
+    * label, and a null node still receives labels from its neighbors.
+    * Each round replaces the label table, so a node whose every
+    * neighbor is null drops out of it.
+    *
+    * The kernel runs in one task, with memory linear in the edge count. */
+  def labelPropagate(e: DataFrame, rounds: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.unsafe.types.UTF8String
     val s = e.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val pairs = e.select(col("src").as("u"), col("dst").as("v"))
       .union(e.select(col("dst").as("u"), col("src").as("v")))
     val dt = pairs.schema("u").dataType
-    val bytesEst = e.queryExecution.optimizedPlan.stats.sizeInBytes
-    // Width follows the edge bytes (16 MB/partition). r17 (advisor item):
-    // the session shuffle width used to be a hard CAP, which bounded the
-    // per-partition dedup set's heap footprint by |edges|/sessionWidth —
-    // an OOM risk on a very large or v-skewed edge list (the in-heap
-    // HashSet below holds a partition's distinct pairs and does not
-    // spill). The bytes estimate now rules; the cap only guards against a
-    // garbage stats estimate (max(session, 2^14) tasks per round is the
-    // sanity ceiling, far above any sane 16 MB-sizing outcome).
-    val widthCap = math.max(
-      s.sessionState.conf.numShufflePartitions.toLong, 1L << 14)
-    val part = new org.apache.spark.HashPartitioner(forcedParts.getOrElse(
-      math.max(1L, math.min(widthCap,
-        (bytesEst * 2 / (16L << 20)).toLong + 1L)).toInt))
     def copyOf(v: Any): Any = v match {
       case u: UTF8String => u.copy()
       case r: InternalRow => r.copy()
@@ -701,130 +559,61 @@ object GraphOps {
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", dt, nullable = true),
       org.apache.spark.sql.types.StructField("lbl", dt, nullable = true)))
-    // SINGLE-PARTITION FAST PATH (r17 optimization round — the
-    // clusterPairs / hits discipline, gated on the same size rule as the
-    // kernel width): at p == 1 every round's three shuffle stages are
-    // sequential one-task jobs of pure scheduling; the whole 4-round
-    // ladder runs inside ONE task. Semantics identical: same boxed-key
-    // equality (java HashMap), same null rules (null v delivers no label,
-    // null u still receives), same (count desc, label asc) argmax under
-    // the same interpreted ordering, and replacement semantics (a node
-    // whose every neighbor is null-v drops from the label table, exactly
-    // like the join+reduce path). A graph past one 16 MB partition keeps
-    // the distributed superstep kernel below.
-    if (part.numPartitions == 1) {
-      val nRounds = rounds
-      val rows = pairs.queryExecution.toRdd
-        .mapPartitions(_.map(r =>
-          (copyOf(r.get(1, dt)), copyOf(r.get(0, dt)))))
-        .coalesce(1)
-        .mapPartitions { it =>
-          val seen = new java.util.HashSet[(Any, Any)]()
-          val vu = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
-          it.foreach(p => if (seen.add(p)) vu += p)
-          var labels = new java.util.HashMap[Any, Any]()
-          vu.foreach { case (_, u) =>
-            if (!labels.containsKey(u)) labels.put(u, u)
-          }
-          for (_ <- 1 to nRounds) {
-            // (u, lbl(v)) counts over non-null-v pairs whose v has a label
-            val counts = new java.util.HashMap[(Any, Any), java.lang.Long]()
-            vu.foreach { case (v, u) =>
-              if (v != null && labels.containsKey(v)) {
-                counts.merge((u, labels.get(v)), 1L, (x, y) =>
-                  java.lang.Long.valueOf(x.longValue + y.longValue))
-              }
-            }
-            // per-u argmax (count desc, label asc) — comparison-total, so
-            // the fold order cannot matter
-            val best = new java.util.HashMap[Any, (Any, java.lang.Long)]()
-            val ci = counts.entrySet().iterator()
-            while (ci.hasNext) {
-              val en = ci.next()
-              val (u, lbl) = en.getKey
-              val c = en.getValue
-              val cur = best.get(u)
-              if (cur == null || c.longValue > cur._2.longValue ||
-                (c.longValue == cur._2.longValue &&
-                  ord.compare(lbl, cur._1) < 0))
-                best.put(u, (lbl, c))
-            }
-            val next = new java.util.HashMap[Any, Any]()
-            val bi = best.entrySet().iterator()
-            while (bi.hasNext) {
-              val en = bi.next()
-              next.put(en.getKey, en.getValue._1)
-            }
-            labels = next
-          }
-          val out = Seq.newBuilder[InternalRow]
-          val li = labels.entrySet().iterator()
-          while (li.hasNext) {
-            val en = li.next()
-            val g = new GenericInternalRow(2)
-            g.update(0, en.getKey); g.update(1, en.getValue)
-            out += (g: InternalRow)
-          }
-          out.result().iterator
-        }
-      return org.apache.spark.sql.classic.GraftSqlInternals
-        .internalCreateDataFrame(s, rows, outSchema)
-    }
-    // (v → u) pairs, deduped per v-partition (all (v,*) co-locate, so a
-    // local set completes the old DataFrame distinct in the same shuffle
-    // that keys the join side)
-    val undByV = pairs.queryExecution.toRdd
+    val rows = pairs.queryExecution.toRdd
       .mapPartitions(_.map(r =>
         (copyOf(r.get(1, dt)), copyOf(r.get(0, dt)))))
-      .partitionBy(part)
-      .mapPartitions({ it =>
-        val seen = scala.collection.mutable.HashSet.empty[(Any, Any)]
-        it.filter(p => seen.add(p))
-      }, preservesPartitioning = true)
-      .persist(lvl)
-    // initial labels: every distinct node (the u slot covers all of them,
-    // the graph being symmetric here), label = own id
-    var labels = undByV.map { case (_, u) => (u, ()) }
-      .reduceByKey(part, (a, _) => a)
-      .mapPartitions(_.map { case (n, _) => (n, n) },
-        preservesPartitioning = true)
-    for (r <- 1 to rounds) {
-      labels = undByV
-        // SQL join semantics: a null v matches no label row
-        .filter(_._1 != null)
-        .join(labels, part) // narrow: both sides hash-partitioned by part
-        .map { case (_, (u, lbl)) => ((u, lbl), 1L) }
-        .reduceByKey(new org.apache.spark.HashPartitioner(part.numPartitions),
-          _ + _)
-        .map { case ((u, lbl), c) => (u, (lbl, c)) }
-        .reduceByKey(part, (a, b) =>
-          if (a._2 > b._2) a
-          else if (a._2 < b._2) b
-          else if (ord.compare(a._1, b._1) <= 0) a else b)
-        .mapValues(_._1)
-      // r17 (advisor item): a large user-supplied `rounds` builds 2
-      // shuffle stages per round with no lineage truncation — the DAG
-      // depth (and the scheduler walk per job) grows with rounds.
-      // Periodically localCheckpoint the label table; never fires at the
-      // library's own 4-round setting.
-      if (r % 32 == 0 && r < rounds) {
-        labels = labels.persist(lvl).localCheckpoint()
-        labels.count(): Unit
+      .coalesce(1)
+      .mapPartitions { it =>
+        // distinct (v, u) pairs; java HashMap/HashSet keys give the boxed
+        // equality SQL grouping uses (±0 unified by copyOf)
+        val seen = new java.util.HashSet[(Any, Any)]()
+        val vu = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
+        it.foreach(p => if (seen.add(p)) vu += p)
+        var labels = new java.util.HashMap[Any, Any]()
+        vu.foreach { case (_, u) =>
+          if (!labels.containsKey(u)) labels.put(u, u)
+        }
+        for (_ <- 1 to rounds) {
+          // (u, lbl(v)) counts over non-null-v pairs whose v has a label
+          val counts = new java.util.HashMap[(Any, Any), java.lang.Long]()
+          vu.foreach { case (v, u) =>
+            if (v != null && labels.containsKey(v)) {
+              counts.merge((u, labels.get(v)), 1L, (x, y) =>
+                java.lang.Long.valueOf(x.longValue + y.longValue))
+            }
+          }
+          // per-u argmax (count desc, label asc) — comparison-total, so
+          // the fold order cannot matter
+          val best = new java.util.HashMap[Any, (Any, java.lang.Long)]()
+          val ci = counts.entrySet().iterator()
+          while (ci.hasNext) {
+            val en = ci.next()
+            val (u, lbl) = en.getKey
+            val c = en.getValue
+            val cur = best.get(u)
+            if (cur == null || c.longValue > cur._2.longValue ||
+              (c.longValue == cur._2.longValue &&
+                ord.compare(lbl, cur._1) < 0))
+              best.put(u, (lbl, c))
+          }
+          val next = new java.util.HashMap[Any, Any]()
+          val bi = best.entrySet().iterator()
+          while (bi.hasNext) {
+            val en = bi.next()
+            next.put(en.getKey, en.getValue._1)
+          }
+          labels = next
+        }
+        val out = Seq.newBuilder[InternalRow]
+        val li = labels.entrySet().iterator()
+        while (li.hasNext) {
+          val en = li.next()
+          val g = new GenericInternalRow(2)
+          g.update(0, en.getKey); g.update(1, en.getValue)
+          out += (g: InternalRow)
+        }
+        out.result().iterator
       }
-    }
-    // materialize the final labels, then release the co-partitioned edge
-    // cache (r17, advisor item: undByV was persisted and never freed — a
-    // long session leaked one edge-sized cache per build). The persisted
-    // result is what every consumer reads; the extra count is one narrow
-    // job over node-sized data.
-    val finalLabels = labels.persist(lvl)
-    finalLabels.count()
-    undByV.unpersist(blocking = false)
-    val rows = finalLabels.map { case (n, l) =>
-      val g = new GenericInternalRow(2)
-      g.update(0, n); g.update(1, l)
-      g: InternalRow
-    }
     org.apache.spark.sql.classic.GraftSqlInternals.internalCreateDataFrame(
       s, rows, outSchema)
   }
@@ -860,8 +649,7 @@ object GraphOps {
     * Shape at scale: degree and intra-edge counts are partial-aggregable
     * corpus-shuffles keyed by node/community (never all-pairs); m rides
     * as a broadcast 1-row frame; output is community-space. The labels
-    * join is the same node-keyed equi-join every LPA round already
-    * pays. */
+    * join is one node-keyed equi-join. */
   def modularity(e: DataFrame, labels: DataFrame): DataFrame = {
     def r6(c: org.apache.spark.sql.Column) =
       floor(c * lit(1e6) + lit(0.5d)).cast("double") / lit(1e6)

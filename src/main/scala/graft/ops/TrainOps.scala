@@ -287,7 +287,7 @@ object TrainOps {
     // per step whose literals (bias, C) change every step (~130-180 ms
     // of planning each, the text_bpe_artifact finding) plus a
     // doc-aggregate shuffle per consumer. The loop now runs as an RDD
-    // superstep kernel (the text_bpe_artifact / graph_hits discipline):
+    // superstep kernel (the text_bpe_artifact discipline):
     // the sparse feature frame pivots ONCE into per-doc records
     // (y, present (bucket, x) pairs) — the same doc-keyed exchange each
     // old step paid for its groupBy(doc_id) — and every step is ONE

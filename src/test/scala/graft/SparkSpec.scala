@@ -20,6 +20,11 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.ops.Fs.pointStreamCheckpointsAtTmpfs(s)
+    // the test JVM is forked: remove this app's checkpoint root and stream
+    // scratch when it exits (the id is read now, so the hook does not
+    // depend on running before Spark's own stop)
+    val appId = s.sparkContext.applicationId
+    sys.addShutdownHook(graft.ops.Fs.cleanupAppScratch(appId))
     s
   }
 }

@@ -159,27 +159,57 @@ class GraphOpsSpec extends SparkSpec {
     assert(row.getAs[Double]("assortativity") == 1.0)
   }
 
-  test("hits: single-partition fast path equals the distributed kernel") {
-    // r17: the size rule runs tiny graphs in ONE task; force the
-    // distributed superstep kernel via the test hook and pin equality
+  test("hits: fixed-point hub and authority scores pinned on a 6-node graph") {
+    // 4 iterations in 1e-12 units; each double column is its fixed-point
+    // column over 1e12 (values cross-checked against a plain integer
+    // replay of the same half-steps and truncating normalize)
     val e = Seq((1L, 10L), (2L, 10L), (3L, 11L), (10L, 3L), (11L, 1L),
       (2L, 11L), (3L, 10L), (4L, 10L), (4L, 11L)).toDF("src", "dst")
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
-    val fast = asMap(GraphOps.hits(e))         // size rule -> 1 partition
-    val dist = asMap(GraphOps.hitsKernel(e, 4, Some(3)))
-    assert(fast == dist, s"fast=$fast dist=$dist")
+    val rows = GraphOps.hits(e).collect()
+    val got = rows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == Map(
+      1L -> ((154224537035L, 578703703L)),
+      2L -> ((284866898145L, 0L)),
+      3L -> ((284866898145L, 578703703L)),
+      4L -> ((284866898145L, 0L)),
+      10L -> ((144675925L, 616898148143L)),
+      11L -> ((144675925L, 522569444440L))), s"got $got")
+    rows.foreach { r =>
+      assert(r.getDouble(3) == r.getLong(1).toDouble / 1e12 &&
+        r.getDouble(4) == r.getLong(2).toDouble / 1e12, s"row $r")
+    }
   }
 
-  test("labelPropagate: fast path equals the distributed kernel") {
+  test("labelPropagate: labels after 4 rounds pinned, ties to the smaller label") {
+    // two triangles {0,1,2} and {10,11,12} bridged by 2-10, plus pendants
+    // 5-0 and 6-12. Round 4 by hand (round-3 labels: 0,1,2,5,11,12 -> 0;
+    // 6,10 -> 2): node 11 sees labels 2 (via 10) and 0 (via 12) once each
+    // and the tie goes to 0; node 12 sees 2 twice (via 10 and 6) and 0
+    // once (via 11), so 2 wins on count
     val e = Seq((0L, 1L), (0L, 2L), (1L, 2L), (10L, 11L), (10L, 12L),
       (11L, 12L), (2L, 10L), (5L, 0L), (6L, 12L)).toDF("src", "dst")
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fast = asMap(GraphOps.labelPropagate(e, 4))
-    val dist = asMap(GraphOps.lpaKernel(e, 4, Some(3)))
-    assert(fast == dist, s"fast=$fast dist=$dist")
+    val got = GraphOps.labelPropagate(e, 4).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 5L -> 0L, 6L -> 0L,
+      10L -> 0L, 11L -> 0L, 12L -> 2L), s"got $got")
+  }
+
+  test("labelPropagate: a null-v pair delivers no label, a null node gets labels") {
+    // triangle {0,1,2}, a null node tied to 2, and 5 whose only
+    // neighbor is null. Round 1: the null node sees labels 2 and 5 once
+    // each and takes 2; node 5 hears only from the null node, whose pair
+    // delivers nothing, so 5 drops out of the label table; node 2 counts
+    // 0 and 1, not the null node's label
+    val e = Seq((Some(0L), Some(1L)), (Some(1L), Some(2L)),
+      (Some(0L), Some(2L)), (None, Some(2L)), (Some(5L), None))
+      .toDF("src", "dst")
+    def labels(rounds: Int) = GraphOps.labelPropagate(e, rounds).collect()
+      .map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
+    assert(labels(1) == Map(Some(0L) -> Some(1L), Some(1L) -> Some(0L),
+      Some(2L) -> Some(0L), None -> Some(2L)), s"round 1: ${labels(1)}")
+    // by round 2 the triangle coheres on 0 and the null node follows it
+    assert(labels(4) == Map(Some(0L) -> Some(0L), Some(1L) -> Some(0L),
+      Some(2L) -> Some(0L), None -> Some(0L)), s"round 4: ${labels(4)}")
   }
 
   test("labelPropagate: -0.0 and 0.0 double node ids are one node " +
@@ -192,14 +222,12 @@ class GraphOpsSpec extends SparkSpec {
     assert(got.values.toSet.size == 1, s"triangle must cohere: $got")
   }
 
-  test("hits: -0.0 and 0.0 double node ids are one node on both kernels") {
+  test("hits: -0.0 and 0.0 double node ids are one node") {
     val e = Seq((-0.0d, 1.0d), (0.0d, 2.0d), (1.0d, 2.0d)).toDF("src", "dst")
-    for (df <- Seq(GraphOps.hits(e), GraphOps.hitsKernel(e, 4, Some(3)))) {
-      // raw bits: Scala's == and Set would unify the two zeros themselves
-      val nodes = df.collect().map(r =>
-        java.lang.Double.doubleToRawLongBits(r.getDouble(0)))
-      assert(nodes.sorted.toSeq == Seq(0.0d, 1.0d, 2.0d)
-        .map(java.lang.Double.doubleToRawLongBits), s"nodes ${nodes.toSeq}")
-    }
+    // raw bits: Scala's == and Set would unify the two zeros themselves
+    val nodes = GraphOps.hits(e).collect().map(r =>
+      java.lang.Double.doubleToRawLongBits(r.getDouble(0)))
+    assert(nodes.sorted.toSeq == Seq(0.0d, 1.0d, 2.0d)
+      .map(java.lang.Double.doubleToRawLongBits), s"nodes ${nodes.toSeq}")
   }
 }
