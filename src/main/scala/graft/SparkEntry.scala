@@ -127,11 +127,11 @@ object SparkEntry {
     // item-sized steps execute at plan build
     "rel_bradley_terry",
     // composed pipeline: runs the GD training loop (trainedQuality) and
-    // the component kernel's supersteps at plan build, plus prefixSums'
-    // offset pass
+    // the components kernel's localCheckpoint at plan build, plus
+    // prefixSums' offset pass
     "pipe_corpus_e2e",
-    // grid-density clustering: the components kernel iterates RDD
-    // supersteps at build (dedup_clusters/graph_components discipline)
+    // grid-density clustering: the dense-cell frame and the components
+    // kernel's labels are localCheckpointed at build
     "geo_cluster_grid",
     // globalRank/groupedRank's per-partition offset pass runs at plan
     // build — every rider of the rank substrate is eager, including the

@@ -298,12 +298,11 @@ object BpeOps {
     }
   }
 
-  /** The per-step loop as an RDD superstep kernel — the clusterPairs /
-    * graph-components discipline, adopted here in r16 after profiling
-    * the bpe_artifact fixed cost: a FRESH DataFrame plan per step pays
-    * ~120-150 ms of Catalyst analysis/optimization/physical planning
-    * before any task runs (measured against a trivial 31-row aggregate —
-    * fresh plan 176 ms/iter vs 53 ms re-collecting the same
+  /** The per-step loop as an RDD superstep kernel, adopted here in r16
+    * after profiling the bpe_artifact fixed cost: a FRESH DataFrame plan
+    * per step pays ~120-150 ms of Catalyst analysis/optimization/physical
+    * planning before any task runs (measured against a trivial 31-row
+    * aggregate — fresh plan 176 ms/iter vs 53 ms re-collecting the same
     * QueryExecution vs 36 ms for a raw 1-task RDD job), and 32 steps
     * paid that planning constant 32 times — ~3/4 of the training wall.
     * The step arithmetic is exact longs either way (reduceByKey ≡ the

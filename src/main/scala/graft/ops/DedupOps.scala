@@ -434,8 +434,9 @@ object DedupOps {
   }
 
   /** Verified near-dup pairs without output ordering (shared corpus core).
-    * Staged: both the neardup-pairs query and the clustering query consume
-    * it, and clustering reads it twice (edge directions). */
+    * Staged: the neardup-pairs query and the four clustering consumers
+    * (dedup_clusters, dedup_cluster_quality, dedup_keeper_quality,
+    * pipe_corpus_e2e) all read it. */
   private[ops] def verifiedPairs(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "vp") {
       nearDupPairs(docs(s, dir), 0.8,
@@ -444,13 +445,9 @@ object DedupOps {
 
   /** Duplicate clusters: connected components over the verified near-dup
     * pairs — the step that turns pairwise matches into the actual dedup
-    * action (keep min doc_id per cluster, drop the rest). Iterative
-    * min-label propagation: each superstep takes the min label over
-    * neighbors, converging in O(component diameter) supersteps — the
-    * Pregel/GraphX plan shape, expressed with joins; each iteration is
-    * localCheckpointed so lineage stays bounded. Near-dup components are
-    * tiny by nature (mutual 0.8-Jaccard cliques), so convergence is fast
-    * at any corpus size. */
+    * action (keep min doc_id per cluster, drop the rest). The components
+    * kernel (`clusterPairs`) runs in one task, with memory linear in the
+    * node count. */
   private def nearDupClusters(s: SparkSession, dir: String): DataFrame =
     clusterPairs(verifiedPairs(s, dir))
 
@@ -527,41 +524,17 @@ object DedupOps {
   }
 
   /** PUBLIC generic connected components over a (d1, d2) pair DataFrame:
-    * returns (doc_id, cluster_id) where cluster_id = min reachable id. */
-  def clusterPairs(pairs0: DataFrame): DataFrame = {
-    val s = pairs0.sparkSession
+    * returns (doc_id, cluster_id) where cluster_id = min reachable id.
+    * The kernel runs in one task, with memory linear in the node count:
+    * the pair plan runs at its own width and one single-partition shuffle
+    * funnels its rows into a union-find (path-compressed), whose labels
+    * are a unique function of the edge set. */
+  def clusterPairs(pairs: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
     import s.implicits._
-    // the pair plan is read three times before the first superstep (count,
-    // node set, edge set) — persist it unless the caller already did (an
-    // unpersisted nearDupPairs chain would otherwise recompute the whole
-    // Jaccard verify pipeline per read); released after the loop
-    val inputCached = pairs0.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pairs = if (inputCached) pairs0
-      else pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Iterative min-label propagation on co-partitioned RDDs — the GraphX/
-    // Pregel execution shape. The DataFrame API re-plans and re-shuffles
-    // BOTH join sides every superstep; here the edge list is hash-
-    // partitioned by destination once, the label RDD shares the
-    // partitioner, so each superstep's join is narrow and only the
-    // reduceByKey moves data. Partition count scales with the (verified
-    // near-dup) edge count, which is orders of magnitude smaller than the
-    // corpus at any scale.
-    val pairRdd = pairs.select(col("d1"), col("d2")).as[(Long, Long)].rdd
-    val nPairs = pairs.count() // pairs is persisted; drives partition sizing
-    val p = math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-      nPairs / 500000L + 1L)).toInt
-    // Single-partition regime (r16 optimization): when the edge set fits
-    // one partition anyway, the superstep loop below still schedules ~10
-    // sequential one-task jobs (eByV build, per-superstep propagate +
-    // shortcut, per-superstep convergence action) whose scheduling
-    // overhead dwarfs the work. A single-task union-find computes the
-    // IDENTICAL labeling in one job — connected components with
-    // min-reachable-id labels are a unique function of the edge set, so
-    // there is nothing algorithm-dependent to diverge (pinned by the
-    // OpsSpec/cluster fixtures either way). The distributed superstep
-    // path below is unchanged for p > 1 — the 100 TB shape.
-    if (p == 1) {
-      val lab = pairRdd.coalesce(1).mapPartitions { it =>
+    val lab = pairs.select(col("d1"), col("d2")).as[(Long, Long)].rdd
+      .coalesce(1, shuffle = true)
+      .mapPartitions { it =>
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -583,77 +556,8 @@ object DedupOps {
         }
         parent.keys.iterator.map(n => (n, minOf(find(n))))
       }
-      val result = lab.toDF("doc_id", "cluster_id").localCheckpoint(true)
-      if (!inputCached) pairs.unpersist(blocking = false)
-      return result.orderBy(col("doc_id"))
-    }
-    val part = new org.apache.spark.HashPartitioner(p)
-    val nodes = pairRdd.flatMap { case (a, b) => Iterator(a, b) }.distinct(p)
-    // keyed by propagation source v: both directions + a self-loop per node,
-    // so one join+min-reduce is a whole superstep:
-    // new_label(u) = min(label(u), min over neighbors' labels)
-    val eByV = pairRdd
-      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .union(nodes.map(u => (u, u)))
-      .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var lab = nodes.map(u => (u, u)).partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // labels only decrease, so their exact Long sum strictly decreases
-    // until the fixpoint (wraparound still detects any change); the sum is
-    // read from the action that materializes the new labels — exactly one
-    // tiny job per superstep
-    def labelSum(r: org.apache.spark.rdd.RDD[(Long, Long)]): Long =
-      r.values.fold(0L)(_ + _)
-    var prevSum = labelSum(lab)
-    var iter = 0
-    var converged = false
-    // Each superstep is edge propagation PLUS a pointer-doubling shortcut
-    // (label(u) := label(label(u)) — labels are node ids, so the current
-    // label table answers the lookup): plain min-label propagation needs
-    // ~diameter supersteps, which on a chain-shaped graph is |V| and would
-    // blow any fixed cap; with the shortcut the label distance covered
-    // doubles per superstep, so 64 iterations bound any graph that fits in
-    // a Long's worth of nodes. Non-convergence inside the cap can then only
-    // be a bug, and the require below makes it fail loudly instead of
-    // returning wrong component labels.
-    val MAX_ITERS = 64
-    while (!converged && iter < MAX_ITERS) {
-      // prop is read twice (shortcut lookup table + its own labels):
-      // persist for the superstep, released once `next` is materialized
-      val prop = eByV.join(lab)
-        .map { case (_, (u, lv)) => (u, lv) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // shortcut: every label l is itself a node, so joining (l, u) against
-      // prop reads label(l); ll <= lv always (labels only decrease), and the
-      // reduceByKey restores `part` for the next superstep's narrow join
-      val next = prop.map { case (u, l) => (l, u) }
-        .partitionBy(part)
-        .join(prop)
-        .map { case (_, (u, ll)) => (u, ll) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val s2 = labelSum(next)
-      prop.unpersist(blocking = false)
-      lab.unpersist(blocking = false)
-      lab = next
-      converged = s2 == prevSum
-      prevSum = s2
-      iter += 1
-    }
-    require(converged,
-      s"connected components did not converge in $MAX_ITERS supersteps " +
-        "(pointer-doubling bounds any graph well inside this cap; " +
-        "non-convergence is a kernel bug, not a data property)")
-    // truncate the plan to the materialized labels, then release the
-    // iteration state — nothing may pin block-manager memory for the rest
-    // of a long session once the query's result is independent of it
-    val result = lab.toDF("doc_id", "cluster_id").localCheckpoint(true)
-    eByV.unpersist(blocking = false)
-    lab.unpersist(blocking = false)
-    if (!inputCached) pairs.unpersist(blocking = false)
-    result.orderBy(col("doc_id"))
+    lab.toDF("doc_id", "cluster_id").localCheckpoint(true)
+      .orderBy(col("doc_id"))
   }
 
   /** Containment near-dup — the asymmetric case Jaccard misses: a document
@@ -1237,8 +1141,8 @@ object DedupOps {
          |  MAX(abs(est - jaccard)) AS max_abs_err
          |FROM scored""".stripMargin
     },
-    // min-label fixpoint == min reachable node == the recursive closure's
-    // per-node minimum
+    // cluster_id = min reachable node == the recursive closure's per-node
+    // minimum
     "dedup_clusters" ->
       s"""WITH RECURSIVE $tok3Cte, $sigCte, $bandsCte,
          |pairs AS (

@@ -270,18 +270,18 @@ object GeoOps {
     * replaced by the grid census, which is ONE hash aggregate on the
     * cell key; adjacency forms by the SAME 3×3 neighbor-key explode +
     * equi-join as geo_proximity_pairs (never a cells² join), and the
-    * components run on `DedupOps.clusterPairs`' pointer-doubling kernel
-    * over the dense-cell graph — a frame bounded by the occupied-grid
-    * size, not the corpus. Isolated dense cells are singleton clusters
-    * (left-anti against the edge set), not dropped.
+    * components run on `DedupOps.clusterPairs` over the dense-cell graph;
+    * that kernel runs in one task, with memory linear in the node count.
+    * Isolated dense cells are singleton clusters (left-anti against the
+    * edge set), not dropped.
     *
-    * EAGER (SparkEntry.eagerQueries): the components kernel iterates
-    * RDD supersteps at build. */
+    * EAGER (SparkEntry.eagerQueries): the dense-cell frame and the
+    * components kernel's labels are localCheckpointed at build. */
   private def clusterGridQ(s: SparkSession, dir: String): DataFrame =
     clusterGrid(points(s, dir), DBSCAN_MINPTS)
 
   /** PUBLIC core over any frame with `lat`/`lon` double columns — see
-    * clusterGridQ. EAGER: iterates the components kernel at call. */
+    * clusterGridQ. EAGER: runs the components kernel at call. */
   def clusterGrid(pts: DataFrame, minPts: Long): DataFrame = {
     val dense = pts
       .groupBy(floor(col("lat")).cast("long").as("cla"),

@@ -349,10 +349,10 @@ object GraphOps {
 
   /** Connected components over the (undirected view of the) edge graph —
     * the community/partition primitive link-level dedup and corpus
-    * clustering both reduce to. Reuses the min-label-propagation kernel
-    * (`DedupOps.clusterPairs`: co-partitioned RDD supersteps, one narrow
-    * join + min-reduce each, label-sum convergence) and summarizes one
-    * row per component: id = min member node, size. Oracle = the
+    * clustering both reduce to. Reuses the components kernel
+    * (`DedupOps.clusterPairs`), which runs in one task, with memory linear
+    * in the node count, and summarizes one row per component: id = min
+    * member node, size. Oracle = the
     * recursive min-reachable-id closure, the same formulation
     * dedup_clusters pins. */
   private def componentsQ(s: SparkSession, dir: String): DataFrame =
@@ -950,7 +950,7 @@ object GraphOps {
          |)
          |SELECT a, b, cn, jaccard FROM scored
          |ORDER BY jaccard DESC, a, b LIMIT $LP_TOPK""".stripMargin,
-    // min-label fixpoint == min reachable node over the undirected graph
+    // component id = min reachable node over the undirected graph
     "graph_components" ->
       s"""WITH RECURSIVE $edgesSql,
          |und AS (

@@ -1231,10 +1231,11 @@ object Similarity {
 
   /** Semantic clusters — the downstream of the k-NN graph: keep edges with
     * cosine ≥ τ (undirected, canonicalized), then connected components via
-    * the same min-label propagation the text near-dup clustering uses
-    * (DedupOps.clusterPairs). The full quantize → knn → threshold → cluster
-    * pipeline, each stage oracle-checked; isolated vectors (no qualifying
-    * edge) don't appear — production treats them as singleton clusters. */
+    * the kernel the text near-dup clustering uses (DedupOps.clusterPairs),
+    * which runs in one task, with memory linear in the node count. The
+    * full quantize → knn → threshold → cluster pipeline, each stage
+    * oracle-checked; isolated vectors (no qualifying edge) don't appear —
+    * production treats them as singleton clusters. */
   private def knnComponents(s: SparkSession, dir: String): DataFrame = {
     val edges = knnEdges(s, dir).filter(col("sim") >= KNN_EDGE_TAU)
       .select(least(col("src"), col("dst")).as("d1"),

@@ -121,11 +121,16 @@ object TrainOps {
   private[graft] def trainedQuality(s: SparkSession, dir: String): TrainResult =
     Staging.stagedValue(s, dir, "qtrain_model") {
       val docs = graft.Tables.balanced(s, dir, "documents", "doc_id")
-      val f = Staging.staged(s, dir, "qtrain_feats")(featsOf(
-        docs, "doc_id", "text", qualityScore(col("text")) >= QTH, B))
-      trainCurve(s, f, STEPS, LR, LAMBDA, B,
+      trainCurve(s, qualityFeats(s, dir), STEPS, LR, LAMBDA, B,
         docs.select(col("doc_id")).distinct().count().toDouble)
     }
+
+  /** The quality gate's staged sparse feature frame over the documents
+    * corpus (one per session and corpus; training and scoring share it). */
+  private[graft] def qualityFeats(s: SparkSession, dir: String): DataFrame =
+    Staging.staged(s, dir, "qtrain_feats")(featsOf(
+      graft.Tables.balanced(s, dir, "documents", "doc_id"),
+      "doc_id", "text", qualityScore(col("text")) >= QTH, B))
 
   /** The oracle-checked query: distill the text_stats quality heuristic
     * into the learned gate over the documents corpus. */
@@ -204,9 +209,7 @@ object TrainOps {
     * learned classifier). */
   private[ops] def qualityApplyQ(s: SparkSession, dir: String): DataFrame = {
     val m = trainedQuality(s, dir)
-    val f = Staging.staged(s, dir, "qtrain_feats")(featsOf(
-      graft.Tables.balanced(s, dir, "documents", "doc_id"),
-      "doc_id", "text", qualityScore(col("text")) >= QTH, B))
+    val f = qualityFeats(s, dir)
     val wDf = s.createDataFrame((0 until B).map(j =>
       (j.toLong, m.w(j), m.mu(j), m.sd(j)))).toDF("bucket", "wgt", "mu", "sd")
     val c = absentPairConstant(s, m)
@@ -251,6 +254,31 @@ object TrainOps {
     Staging.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       trainCurveBody(s, f, B, STEPS, LR, LAMBDA, nDocs)
     }
+  }
+
+  /** Does `f`'s executed plan deliver every doc_id's rows in one
+    * partition, sorted by doc_id? Clustering is Spark's own distribution
+    * rule, so a hash partitioning on doc_id, a PartitioningCollection (a
+    * doc_id join), a coalesced hash partitioning and a single partition
+    * all qualify; sorting is a leading doc_id sort order. An adaptive
+    * root reports no layout of its own; the plan it wraps is read when it
+    * has no exchange left to re-plan (a persisted frame, whose layout
+    * shows once its cache is built, or an executed one). */
+  private[graft] def docClusteredSorted(f: DataFrame): Boolean = {
+    val plan = f.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+          if !a.executedPlan.exists(
+            _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) =>
+        a.executedPlan
+      case p => p
+    }
+    val clusteredByDoc = plan.output.find(_.name == "doc_id").exists { a =>
+      plan.outputPartitioning.satisfies(
+        org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution(Seq(a)))
+    }
+    val sortedByDoc = plan.outputOrdering.headOption
+      .exists(_.references.map(_.name).toSet == Set("doc_id"))
+    clusteredByDoc && sortedByDoc
   }
 
   private def trainCurveBody(s: SparkSession, f: DataFrame, nBuckets: Int,
@@ -327,24 +355,13 @@ object TrainOps {
       val (iDoc, iY, iB, iX) = (f.schema.fieldIndex("doc_id"),
         f.schema.fieldIndex("y"), f.schema.fieldIndex("bucket"),
         f.schema.fieldIndex("x"))
-      // r17 (advisor item): the sorted-run fold ASSUMES the frame is
-      // doc-clustered and doc-sorted (the x-window's exchange + sort).
-      // That invariant was only documented; now it is CHECKED against the
-      // executed plan — a future featsOf edit (or a Catalyst change that
-      // satisfies the window's distribution from a different exchange)
-      // falls back to an explicit doc-keyed repartition + sort instead of
-      // silently splitting a doc across runs and corrupting the gradient.
-      val plan = f.queryExecution.executedPlan
-      val clusteredByDoc = plan.outputPartitioning match {
-        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-          h.expressions.nonEmpty &&
-            h.expressions.forall(_.references.map(_.name).toSet == Set("doc_id"))
-        case _ => false
-      }
-      val sortedByDoc = plan.outputOrdering.headOption
-        .exists(_.references.map(_.name).toSet == Set("doc_id"))
+      // the sorted-run fold ASSUMES the frame is doc-clustered and
+      // doc-sorted (the x-window's exchange + sort); a frame whose
+      // executed plan does not show that layout takes an explicit
+      // doc-keyed repartition + sort instead of silently splitting a doc
+      // across runs and corrupting the gradient
       val src =
-        if (clusteredByDoc && sortedByDoc) f
+        if (docClusteredSorted(f)) f
         else f.repartition(col("doc_id")).sortWithinPartitions(col("doc_id"))
       val pivoted = src.queryExecution.toRdd.mapPartitions { it =>
         new Iterator[(Double, Array[Int], Array[Double])] {

@@ -6,6 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** A fresh directory under java.io.tmpdir whose name carries the app
+    * id, so the session's shutdown hook removes it with the rest of the
+    * app's scratch. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(
+      s"graft_${prefix}_${spark.sparkContext.applicationId}_")
 }
 
 object SparkSpec {

@@ -54,7 +54,7 @@ class SnapshotFetcherSpec extends SparkSpec {
   }
 
   test("fetchToLog lands snapshots SnapshotSource + pipeline can read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fetchlog").toString
+    val dir = tempDir("fetchlog").toString
     def env(hex: String) =
       s"""{"msg":"ok","ac":[{"hex":"$hex","type":"adsb_icao","flight":"FL1",""" +
         s""""r":"N$hex","lat":1.0,"lon":2.0,"seen_pos":0.5,"seen":1.0}]}"""

@@ -18,10 +18,7 @@ class SnapshotSourceSpec extends SparkSpec {
     s"""{"msg":"ok","ac":[$acs]}"""
   }
 
-  private def mkDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_snap_$tag")
-    d.toString
-  }
+  private def mkDir(tag: String): String = tempDir(s"snap_$tag").toString
 
   private def write(dir: String, name: String, body: String): Unit =
     Files.write(Paths.get(dir, name), body.getBytes("UTF-8"))

@@ -106,7 +106,7 @@ class SourceSinkSpec extends SparkSpec {
     val features = Pipeline.features(
       AdsbxSource.fromJsonStrings(spark, Seq(envelope)),
       Fixtures.includesDf(spark), AdsbxConfig(includesFiltering = false))
-    val root = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val root = tempDir("sink").toString
     val write = FeatureSink.idempotentBatchWriter(root) _
     write(features, 0L)
     write(features, 0L) // simulated post-failure replay of the same batch

@@ -22,7 +22,7 @@ class BpeArtifactSpec extends SparkSpec {
   }
 
   test("a refresh publishes the next version and both stay readable") {
-    val base = s"/tmp/graft_bpe_artifact_spec_${System.nanoTime()}"
+    val base = tempDir("bpe_artifact_spec").toString
     import spark.implicits._
     def publish(rows: Seq[(Long, String, String, Long)]): Long = {
       val v0 = CommitLog.latest(base).map(_.version).getOrElse(0L)

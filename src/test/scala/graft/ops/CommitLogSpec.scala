@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class CommitLogSpec extends SparkSpec {
 
   private def freshTable(tag: String): String =
-    Files.createTempDirectory(s"graft_commitlog_$tag").toString
+    tempDir(s"commitlog_$tag").toString
 
   test("two racing writers: exactly one commits, the other conflicts") {
     val table = freshTable("race")

@@ -8,16 +8,33 @@ class GraphOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("clusterPairs: chain graph (diameter >> iteration cap) converges") {
-    // plain min-label propagation needs ~diameter supersteps — a
-    // 2000-node chain would exhaust any fixed cap and, before r10,
-    // silently return wrong labels; the pointer-doubling shortcut
-    // converges in O(log diameter) and require(converged) guards the rest
+    // a path is the longest component a node count allows: a 2,000-node
+    // chain would exhaust any round-based kernel's iteration cap; union-find
+    // has no round count, so every node must still label to the minimum id
     val n = 2000L
     val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("d1", "d2")
     val labels = DedupOps.clusterPairs(chain).collect()
     assert(labels.length == n.toInt)
     assert(labels.forall(_.getAs[Long]("cluster_id") == 0L),
       "every chain node must label to the minimum node id")
+  }
+
+  test("clusterPairs: min-id labels over duplicates, reversed pairs, negative ids and a self-loop; empty in, empty out") {
+    //   -5 — 3 — 10        (3, 10) twice and once reversed as (10, 3)
+    //   -2 — 21 — 20
+    //    7 ⟲               a self-loop is a one-node component
+    val pairs = Seq((3L, -5L), (3L, 10L), (3L, 10L), (10L, 3L),
+      (20L, 21L), (21L, -2L), (7L, 7L)).toDF("d1", "d2")
+    val got = DedupOps.clusterPairs(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got == Seq(-5L -> -5L, -2L -> -2L, 3L -> -5L, 7L -> 7L,
+      10L -> -5L, 20L -> -2L, 21L -> -2L))
+
+    val empty = DedupOps.clusterPairs(Seq.empty[(Long, Long)].toDF("d1", "d2"))
+    assert(empty.collect().isEmpty)
+    assert(empty.schema.map(f => f.name -> f.dataType) == Seq(
+      "doc_id" -> org.apache.spark.sql.types.LongType,
+      "cluster_id" -> org.apache.spark.sql.types.LongType))
   }
 
   test("bfsLayers: shortest distance wins, hop bound respected, unreachable excluded") {

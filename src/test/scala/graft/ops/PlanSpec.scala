@@ -83,7 +83,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("snapshot source: each envelope is parsed once (one from_json)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_snap")
+    val dir = tempDir("plan_snap")
     for (i <- 0 until 2)
       java.nio.file.Files.writeString(dir.resolve(s"s$i.json"),
         graft.adsbx.Fixtures.envelopeJson(Seq(graft.adsbx.Fixtures.aircraft.head)))

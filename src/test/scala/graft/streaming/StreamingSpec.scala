@@ -6,7 +6,6 @@ import graft.adsbx.sources.AdsbxSource
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 import java.sql.Timestamp
 import scala.collection.mutable
 
@@ -162,7 +161,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, Double)]
     val events = input.toDF().toDF("user_id", "value")
-    val root = Files.createTempDirectory("graft_incmerge_test").toString
+    val root = tempDir("incmerge_test").toString
     val (q, readState) = StreamOps.startIncrementalMerge(
       events, root, Trigger.ProcessingTime(50))
     try {

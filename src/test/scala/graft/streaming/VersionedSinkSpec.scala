@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -15,7 +13,7 @@ class VersionedSinkSpec extends SparkSpec {
   test("each micro-batch publishes the complete aggregate as the next version") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_vsink_spec").toString
+    val table = tempDir("vsink_spec").toString
     val input = MemoryStream[(Long, Double)]
     val agg = input.toDF().toDF("user_id", "value")
       .groupBy(col("user_id"))
