@@ -159,15 +159,15 @@ object SparkEntry {
     // grid-density clustering: the dense-cell frame is localCheckpointed
     // at build
     "geo_cluster_grid",
-    // globalRank/groupedRank's per-partition offset pass runs at plan
-    // build — every rider of the rank substrate is eager, including the
-    // groupedRank-based exact-percentile family
+    // the rank substrate's range-offset kernel (Relational2.rangeScan,
+    // under globalRank, groupedRank, prefixSums and globalGroupedRank)
+    // collects its per-partition summaries at plan build — every rider
+    // is eager, including the groupedRank-based exact-percentile family
     "text_curriculum_shards", "rel_winsorize", "rel_gaps_islands",
     "rel_gini_concentration", "rel_mann_whitney",
     "rel_decile_lift", "rel_equidepth_hist", "rel_rank_quantiles",
     "rel_percentile", "rel_impute_median", "rel_outliers_mad",
     "rel_approx_percentile",
-    // prefixSums' offset pass, the same per-partition collect
     "rel_decision_stump")
 
   def oracleSql: Map[String, String] =

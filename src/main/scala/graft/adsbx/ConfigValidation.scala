@@ -23,6 +23,9 @@ object ConfigValidation {
     "https://adsbexchange-com1.p.rapidapi.com",
     "https://adsbexchange.com/api/aircraft")
 
+  /** A plain decimal number, as the URL's lat/lon path segments take it. */
+  private val number = """[-+]?(\d+(\.\d*)?|\.\d+)"""
+
   /** Driver-side strict validation (the reference's reject-at-startup).
     * Returns all problems, not just the first — an operator fixing a
     * 50-entry allow-list wants the full list. */
@@ -37,7 +40,12 @@ object ConfigValidation {
         else Seq(s"includes[$i].group: '${inc.group}' not in the ${Schemas.includeGroups.size}-value enum")
       d ++ g
     }
-    val errs = apiErr ++ incErrs
+    // SnapshotFetcher.request splits this on ',' into the URL's lat and lon
+    val latLon = config.queryLatLon.split(",", -1).map(_.trim)
+    val latLonErr =
+      if (latLon.length == 2 && latLon.forall(_.matches(number))) Nil
+      else Seq(s"queryLatLon: '${config.queryLatLon}' is not 'lat,lon' (two numbers)")
+    val errs = apiErr ++ latLonErr ++ incErrs
     if (errs.isEmpty) Right(config) else Left(errs)
   }
 

@@ -2,7 +2,7 @@ package graft.adsbx.sources
 
 import java.net.URLEncoder
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.adsbx.AdsbxConfig
 
@@ -67,13 +67,22 @@ object SnapshotFetcher {
 
   /** Poll once and append the envelope to a snapshot-log directory under
     * the monotonic-filename contract `SnapshotSource` reads
-    * (`snap_{seq}.json`, zero-padded so name order == arrival order). */
+    * (`snap_{seq}.json`, zero-padded so name order == arrival order).
+    *
+    * The file appears whole: the body is written to `.snap_{seq}.json.tmp`
+    * (a name `SnapshotSource` never lists) and then hard-linked under its
+    * final name, so a trigger listing mid-write never sees a truncated
+    * envelope. A link, not a rename: `createLink` refuses an existing
+    * name (a repeated seq throws and the first body stays), where an
+    * ATOMIC_MOVE would silently replace it on Linux. */
   def fetchToLog(config: AdsbxConfig, http: FetchRequest => String,
                  clock: () => Long, dir: String, seq: Long): Path = {
     val body = fetchOnce(config, http, clock)
-    Files.createDirectories(Paths.get(dir))
-    Files.write(Paths.get(dir, f"snap_$seq%012d.json"),
-      body.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE_NEW)
+    val name = f"snap_$seq%012d.json"
+    val d = Files.createDirectories(Paths.get(dir))
+    val tmp = Files.write(d.resolve(s".$name.tmp"),
+      body.getBytes(StandardCharsets.UTF_8))
+    try Files.createLink(d.resolve(name), tmp)
+    finally Files.delete(tmp)
   }
 }

@@ -225,21 +225,7 @@ object CorpusOps {
       .filter(col("cum_t") > 0 && col("cum_v") > 0)
       .select(round(log(col("cum_t").cast("double")), 6).as("x"),
         round(log(col("cum_v").cast("double")), 6).as("y"))
-    val dec = Exact.dec
-    val m = pts.agg(count(lit(1)).as("n"),
-      sum(col("x").cast(dec)).cast("double").as("sx"),
-      sum(col("y").cast(dec)).cast("double").as("sy"),
-      sum((col("x") * col("x")).cast(dec)).cast("double").as("sxx"),
-      sum((col("y") * col("y")).cast(dec)).cast("double").as("syy"),
-      sum((col("x") * col("y")).cast(dec)).cast("double").as("sxy"))
-    val nd = col("n").cast("double")
-    def dbl(c: String) = col(c)
-    val cov = nd * dbl("sxy") - dbl("sx") * dbl("sy")
-    val varx = nd * dbl("sxx") - dbl("sx") * dbl("sx")
-    val vary = nd * dbl("syy") - dbl("sy") * dbl("sy")
-    val slope = cov / varx
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5d)).cast("double") / lit(1e6)
+    val fit = Exact.olsFit(pts)
     // Degenerate-fit guards (the recall_rel/skill/len_ratio discipline):
     // one usable bucket (tiny frame, or every doc_id equal → a single
     // log-log point) makes varx = 0, and a saturated corpus (the
@@ -247,10 +233,10 @@ object CorpusOps {
     // equal) makes vary = 0. Unguarded, Spark's Divide yields NULL while
     // DuckDB's IEEE division yields NaN/Inf — a cross-engine divergence;
     // guarded, both engines emit NULL ("no fit") explicitly.
-    m.select(col("n").as("n_points"),
-      when(varx > 0, r6(slope)).as("beta"),
-      when(varx > 0, r6((dbl("sy") - slope * dbl("sx")) / nd)).as("ln_k"),
-      when(varx > 0 && vary > 0, r6(cov / sqrt(varx * vary))).as("corr"))
+    fit.moments.select(col("n").as("n_points"),
+      when(fit.varx > 0, fit.slope).as("beta"),
+      when(fit.varx > 0, fit.intercept).as("ln_k"),
+      when(fit.varx > 0 && fit.vary > 0, fit.corr).as("corr"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -36,4 +36,31 @@ object Exact {
   /** DuckDB equivalent of avgD. */
   def avgSql(expr: String): String =
     s"(CAST(SUM(CAST(($expr) AS DECIMAL(30,6))) AS DOUBLE) / COUNT($expr))"
+
+  /** A least-squares line through a points frame's `x` and `y`: `moments`
+    * is its one row (`n` and the five power sums, exact decimal), and the
+    * other fields are the IEEE formula over that row. `slope`, `intercept`
+    * and `corr` are rounded to 6 dp; `varx` and `vary` (n² × variance)
+    * stay raw for a caller's degenerate-fit guards. */
+  final case class OlsFit(moments: DataFrame, varx: Column, vary: Column,
+                          slope: Column, intercept: Column, corr: Column)
+
+  def olsFit(pts: DataFrame): OlsFit = {
+    val (x, y) = (col("x"), col("y"))
+    val m = pts.agg(count(lit(1)).as("n"),
+      sumD(x).as("sx"),
+      sumD(y).as("sy"),
+      sumD(x * x).as("sxx"),
+      sumD(y * y).as("syy"),
+      sumD(x * y).as("sxy"))
+    val nd = col("n").cast("double")
+    val cov = nd * col("sxy") - col("sx") * col("sy")
+    val varx = nd * col("sxx") - col("sx") * col("sx")
+    val vary = nd * col("syy") - col("sy") * col("sy")
+    val slope = cov / varx
+    def r6(c: Column) =
+      floor(c * lit(1e6) + lit(0.5d)).cast("double") / lit(1e6)
+    OlsFit(m, varx, vary, r6(slope),
+      r6((col("sy") - slope * col("sx")) / nd), r6(cov / sqrt(varx * vary)))
+  }
 }

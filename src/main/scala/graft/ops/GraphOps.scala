@@ -688,32 +688,15 @@ object GraphOps {
     * formula runs once on the single result row. Heavy-tailed graphs fit
     * a clearly negative slope. */
   def degreePowerlaw(e: DataFrame): DataFrame = {
-    val dec = Exact.dec
     val hist = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
-    val pts = hist.select(
+    val fit = Exact.olsFit(hist.select(
       round(log(col("deg").cast("double")), 6).as("x"),
-      round(log(col("n_nodes").cast("double")), 6).as("y"))
-    val m = pts.agg(count(lit(1)).as("n"),
-      sum(col("x").cast(dec)).cast("double").as("sx"),
-      sum(col("y").cast(dec)).cast("double").as("sy"),
-      sum((col("x") * col("x")).cast(dec)).cast("double").as("sxx"),
-      sum((col("y") * col("y")).cast(dec)).cast("double").as("syy"),
-      sum((col("x") * col("y")).cast(dec)).cast("double").as("sxy"))
-    val nd = col("n").cast("double")
-    def dbl(c: String) = col(c)
-    val cov = nd * dbl("sxy") - dbl("sx") * dbl("sy")
-    val varx = nd * dbl("sxx") - dbl("sx") * dbl("sx")
-    val vary = nd * dbl("syy") - dbl("sy") * dbl("sy")
-    val slope = cov / varx
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5d)).cast("double") / lit(1e6)
-    m.select(col("n").as("n_points"),
-      r6(slope).as("slope"),
-      r6((dbl("sy") - slope * dbl("sx")) / nd).as("intercept"),
-      r6(cov / sqrt(varx * vary)).as("corr"))
+      round(log(col("n_nodes").cast("double")), 6).as("y")))
+    fit.moments.select(col("n").as("n_points"), fit.slope.as("slope"),
+      fit.intercept.as("intercept"), fit.corr.as("corr"))
   }
 
   private def degreePowerlawQ(s: SparkSession, dir: String): DataFrame =

@@ -3,6 +3,12 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+import scala.reflect.ClassTag
 import Exact._
 
 /** Round-2 relational coverage: the classical operator categories not yet
@@ -310,81 +316,144 @@ object Relational2 {
         min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
       .orderBy(col("bucket"))
 
-  /** Global 1-based rank over a total order WITHOUT a single-partition
-    * window — the scalable replacement for `row_number() OVER (ORDER BY
-    * ...)`: range-repartition on the sort key, sort within partitions,
-    * collect the PER-PARTITION row counts (<= numShufflePartitions rows —
-    * a metadata-sized driver read, same class as FormatOps' file-path
-    * listing, never row data), and add each partition's cumulative offset
-    * to the row's partition-local ordinal.
-    *
-    * Determinism: the ranged plan is materialized to ONE physical RDD
-    * (`ranged.queryExecution.toRdd`) and BOTH jobs below run over that
-    * same object. This is
-    * load-bearing — two separate DataFrame actions each build their own
-    * physical plan, and RangePartitioner re-samples its bounds per plan
-    * (its seed incorporates the RDD id), so the offsets collected by job 1
-    * would describe different partitions than job 2 ranks (the round-4
-    * regression: 14,520/15,000 ranks wrong). Sharing the RDD pins one
-    * ShuffleDependency: bounds are sampled once, job 1 materializes the
-    * shuffle map outputs, and job 2 reuses them — deterministic AND
-    * single-scan. The reduce-side local sort re-runs in job 2, but it is
-    * deterministic because the caller must make the key a total order
-    * (include a unique tiebreak key). The only full-data exchange is the
-    * range repartition; the rank attachment is narrow per-partition
-    * arithmetic off a broadcast of <= numShufflePartitions offsets.
-    * Output adds `__rank` (long, 1-based) and `__n` (long, total rows). */
-  /** The exchange stage under [[globalRank]]: range-repartition on the
-    * keys + partition-local sort. Exposed so PlanSpec can assert the only
-    * full-data exchange is the range repartition (the final globalRank
-    * frame is a Scan ExistingRDD — its exchange lives here, below the
-    * `.toRdd` boundary, where EliminateSorts cannot touch the ordering). */
+  /** The exchange stage under every rank-substrate entry point: range-
+    * repartition on the keys + partition-local sort. Exposed so PlanSpec
+    * can assert the only full-data exchange is the range repartition (the
+    * final frame of [[rangeScan]] is a Scan ExistingRDD — its exchange
+    * lives here, below the `.toRdd` pin, where EliminateSorts cannot touch
+    * the ordering). */
   private[graft] def rangedByKeys(df: DataFrame, keys: Column*): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     df.repartitionByRange(parts, keys: _*).sortWithinPartitions(keys: _*)
   }
 
-  private[graft] def globalRank(df: DataFrame, keys: Column*): DataFrame = {
-    // InternalRow end-to-end (r8 rework): the public rdd/createDataFrame
-    // round-trip paid two full per-row conversions (InternalRow→Row via
-    // the deserializer, Row→InternalRow via the encoder) plus a Seq
-    // allocation per row in Row.fromSeq — overhead proportional to the
-    // data on a path whose real work is one += per row. queryExecution
-    // .toRdd is the same ONE-lineage pin (lazy val on the single
-    // QueryExecution), and the scan over internalCreateDataFrame's result
-    // applies its own UnsafeProjection, so the mutable JoinedRow each
-    // partition reuses is copied before anything downstream buffers it.
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+  /** The range-offset kernel of the rank substrate — exact ranks and
+    * running sums over a total order WITHOUT a single-partition window
+    * (`row_number() OVER (ORDER BY ...)` funnels the whole frame through
+    * one task). [[rangedByKeys]] is the only full-data exchange; then
+    *   - job 1 reduces each sorted partition to a `summary` and collects
+    *     them (<= numShufflePartitions values — a metadata-sized driver
+    *     read, same class as FormatOps' file-path listing, never row data);
+    *   - `prefix` turns the partition-ordered summaries into offsets on the
+    *     driver, broadcast once;
+    *   - job 2 calls `attach(offsets, partition, extra)` once per
+    *     partition, and the function it returns fills `extra` — the
+    *     `added` non-null LongType columns appended to each row — per row,
+    *     in sorted order.
+    *
+    * Determinism: the ranged plan is materialized to ONE physical RDD
+    * (`queryExecution.toRdd`) and BOTH jobs run over that same object.
+    * This is load-bearing — two separate DataFrame actions each build
+    * their own physical plan, and RangePartitioner re-samples its bounds
+    * per plan (its seed incorporates the RDD id), so the offsets collected
+    * by job 1 would describe different partitions than job 2 ranks (the
+    * round-4 regression: 14,520/15,000 ranks wrong). Sharing the RDD pins
+    * one ShuffleDependency: bounds are sampled once, job 1 materializes
+    * the shuffle map outputs, and job 2 reuses them — deterministic AND
+    * single-scan. The reduce-side local sort re-runs in job 2, but it is
+    * deterministic because the caller must make the key a total order
+    * (include a unique tiebreak key). EAGER: job 1 runs at plan build, so
+    * every rider must appear in SparkEntry.eagerQueries.
+    *
+    * InternalRow end-to-end: the public rdd/createDataFrame round-trip
+    * would pay two full per-row conversions plus a Seq allocation per row,
+    * overhead proportional to the data on a path whose real work is a few
+    * += per row. The scan over internalCreateDataFrame's result applies
+    * its own UnsafeProjection, so the mutable JoinedRow each partition
+    * reuses is copied before anything downstream buffers it. */
+  private def rangeScan[S, O: ClassTag](df: DataFrame, keys: Seq[Column],
+      added: Seq[String])(summary: Iterator[InternalRow] => S)(
+      prefix: Seq[S] => O)(
+      attach: (O, Int, GenericInternalRow) => InternalRow => Unit): DataFrame = {
     val spark = df.sparkSession
     val rdd = rangedByKeys(df, keys: _*)
       .queryExecution.toRdd                     // ONE plan, ONE shuffle dep
-    val counts = rdd
-      .mapPartitionsWithIndex((pid, it) => {
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-        Iterator(pid -> n)                      // job 1: counts only
-      }, preservesPartitioning = true)
-      .collect().sortBy(_._1).map(_._2)
-    val total = counts.sum
-    val offsets = spark.sparkContext.broadcast(counts.scanLeft(0L)(_ + _))
-    val ranked = rdd.mapPartitionsWithIndex { (pid, it) =>  // job 2: reuses
-      var rank = offsets.value(pid)                         // job 1's shuffle
-      val extra = new GenericInternalRow(2)
-      extra.update(1, total)
+    val summaries = rdd
+      .mapPartitionsWithIndex((pid, it) => Iterator(pid -> summary(it)),
+        preservesPartitioning = true)
+      .collect().sortBy(_._1).toSeq.map(_._2)   // job 1: summaries only
+    val offsets = spark.sparkContext.broadcast(prefix(summaries))
+    val width = added.size
+    val out = rdd.mapPartitionsWithIndex { (pid, it) =>     // job 2: reuses
+      val extra = new GenericInternalRow(width)             // job 1's shuffle
+      val fill = attach(offsets.value, pid, extra)
       val joined = new JoinedRow
-      it.map { row =>
-        rank += 1
-        extra.update(0, rank)
-        joined(row, extra): InternalRow
-      }
+      it.map { row => fill(row); joined(row, extra): InternalRow }
     }
     org.apache.spark.sql.classic.GraftSqlInternals.internalCreateDataFrame(
-      spark, ranked, org.apache.spark.sql.types.StructType(
-        df.schema.fields
-          :+ org.apache.spark.sql.types.StructField("__rank",
-              org.apache.spark.sql.types.LongType, nullable = false)
-          :+ org.apache.spark.sql.types.StructField("__n",
-              org.apache.spark.sql.types.LongType, nullable = false)))
+      spark, out, StructType(df.schema.fields ++
+        added.map(StructField(_, LongType, nullable = false))))
+  }
+
+  /** Global 1-based rank over a total order: each partition's cumulative
+    * row-count offset plus the row's partition-local ordinal. Output adds
+    * `__rank` (long, 1-based) and `__n` (long, total rows). */
+  private[graft] def globalRank(df: DataFrame, keys: Column*): DataFrame =
+    rangeScan(df, keys, Seq("__rank", "__n")) { it =>
+      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
+    } { counts => (counts.scanLeft(0L)(_ + _), counts.sum) } {
+      case ((offsets, total), pid, extra) =>
+        var rank = offsets(pid)
+        extra.update(1, total)
+        _ => { rank += 1; extra.update(0, rank) }
+    }
+
+  /** The group-key reader of [[groupedRank]] and [[globalGroupedRank]]:
+    * the row's own value (null is a legal group key). */
+  private def groupKey(df: DataFrame, grpField: String): InternalRow => Any = {
+    val (i, dt) = (df.schema.fieldIndex(grpField), df.schema(grpField).dataType)
+    row => row.get(i, dt)
+  }
+
+  /** The counter cell of group `k` in `m`, made by `init` on first sight.
+    * The hash form is right whether a partition holds each group as one
+    * contiguous run or interleaved. A new entry keeps a copy of the key:
+    * an unsafe row's UTF8String points into a reused buffer. */
+  private def groupCell(m: mutable.HashMap[Any, Array[Long]], k: Any)(
+      init: Any => Array[Long]): Array[Long] = {
+    val c = m.getOrElse(k, null)
+    if (c != null) c else {
+      val kept = k match { case u: UTF8String => u.copy(); case x => x }
+      val made = init(kept)
+      m(kept) = made
+      made
+    }
+  }
+
+  /** Job 1 summary of the grouped entry points: rows per group in one
+    * partition (the collect is |partitions|×|groups| — metadata). */
+  private def groupCounts(key: InternalRow => Any)(
+      it: Iterator[InternalRow]): Map[Any, Long] = {
+    val m = mutable.HashMap.empty[Any, Array[Long]]
+    while (it.hasNext) groupCell(m, key(it.next()))(_ => Array(0L))(0) += 1L
+    m.view.mapValues(_(0)).toMap
+  }
+
+  /** Driver prefix of the grouped entry points: each partition's starting
+    * in-group offset per group it holds, and each group's total. */
+  private def groupOffsets(counts: Seq[Map[Any, Long]])
+      : (Seq[Map[Any, Long]], Map[Any, Long]) = {
+    val totals = mutable.HashMap.empty[Any, Long]
+    val offsets = counts.map(_.map { case (k, c) =>
+      val off = totals.getOrElse(k, 0L)
+      totals(k) = off + c
+      k -> off
+    })
+    (offsets, totals.toMap)
+  }
+
+  /** Job 2 attach of the grouped entry points: fills the row's in-group
+    * rank (1-based) at `at` and its group's total at `at + 1`. */
+  private def groupRanks(key: InternalRow => Any,
+      grouped: (Seq[Map[Any, Long]], Map[Any, Long]), pid: Int,
+      extra: GenericInternalRow, at: Int): InternalRow => Unit = {
+    val (offsets, totals) = grouped
+    val seen = mutable.HashMap.empty[Any, Array[Long]]
+    row => {
+      val c = groupCell(seen, key(row))(k => Array(offsets(pid)(k), totals(k)))
+      c(0) += 1L
+      extra.update(at, c(0)); extra.update(at + 1, c(1))
+    }
   }
 
   /** PER-GROUP scalable rank — `globalRank`'s grouped sibling. A keyed
@@ -393,76 +462,20 @@ object Relational2 {
     * and fat (the rel_percentile trade, measured at 4.8× on the 10×
     * rehearsal for rel_winsorize's 3-group sort). Here each group spans
     * MANY range partitions: range-repartition on (grp, keys...), count
-    * rows per (partition, group) in one narrow job (the collect is
-    * |partitions|×|groups| — metadata), then assign ranks per partition
-    * from broadcast prefix offsets. Appends `__grank` (1-based within
-    * group) and `__gn` (group total). Rows stay sorted by (grp, keys)
-    * within partitions, groups contiguous across the range order.
-    * Ties broken by the trailing keys — pass enough for a total order
-    * when rank identity matters (for order STATISTICS, value ties make
-    * any tie order equivalent). */
+    * rows per (partition, group), and assign ranks per partition from the
+    * prefix offsets. Appends `__grank` (1-based within group) and `__gn`
+    * (group total). Rows stay sorted by (grp, keys) within partitions,
+    * groups contiguous across the range order. Ties broken by the
+    * trailing keys — pass enough for a total order when rank identity
+    * matters (for order STATISTICS, value ties make any tie order
+    * equivalent). */
   private[graft] def groupedRank(df: DataFrame, grpField: String,
                                  keys: Column*): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.unsafe.types.UTF8String
-    val spark = df.sparkSession
-    val grpIdx = df.schema.fieldIndex(grpField)
-    val grpType = df.schema(grpField).dataType
-    val rdd = rangedByKeys(df, (col(grpField) +: keys): _*)
-      .queryExecution.toRdd                       // ONE plan, ONE shuffle dep
-    def keyOf(row: InternalRow): Any = row.get(grpIdx, grpType) match {
-      case u: UTF8String => u.copy() // unsafe rows reuse the buffer
-      case x => x
+    val key = groupKey(df, grpField)
+    rangeScan(df, col(grpField) +: keys, Seq("__grank", "__gn"))(
+      groupCounts(key))(groupOffsets) {
+      (grouped, pid, extra) => groupRanks(key, grouped, pid, extra, 0)
     }
-    // sentinel distinct from any data value (null is a legal group key)
-    val Unset: Any = GroupedRankUnset
-    val counts = rdd.mapPartitionsWithIndex((pid, it) => {
-      // partition is sorted by (grp, keys): runs per group are contiguous
-      val acc = scala.collection.mutable.ArrayBuffer.empty[(Any, Long)]
-      var cur: Any = Unset; var n = 0L
-      while (it.hasNext) {
-        val k = keyOf(it.next())
-        if (cur == Unset || k != cur) {
-          if (cur != Unset) acc += ((cur, n)); cur = k; n = 0L
-        }
-        n += 1L
-      }
-      if (cur != Unset) acc += ((cur, n))
-      Iterator(pid -> acc.toSeq)                  // job 1: counts only
-    }, preservesPartitioning = true).collect().sortBy(_._1)
-    val offsets = scala.collection.mutable.HashMap.empty[(Int, Any), Long]
-    val totals = scala.collection.mutable.HashMap.empty[Any, Long]
-    counts.foreach { case (pid, seq) => seq.foreach { case (k, c) =>
-      offsets((pid, k)) = totals.getOrElse(k, 0L)
-      totals(k) = totals.getOrElse(k, 0L) + c
-    } }
-    val bOff = spark.sparkContext.broadcast(offsets.toMap)
-    val bTot = spark.sparkContext.broadcast(totals.toMap)
-    val ranked = rdd.mapPartitionsWithIndex { (pid, it) =>  // job 2: reuses
-      var cur: Any = GroupedRankUnset                       // job 1's shuffle
-      var rank = 0L; var total = 0L
-      val extra = new GenericInternalRow(2)
-      val joined = new JoinedRow
-      it.map { row =>
-        val k = row.get(grpIdx, grpType)
-        if (cur == GroupedRankUnset || k != cur) {
-          cur = k match { case u: UTF8String => u.copy(); case x => x }
-          rank = bOff.value.getOrElse((pid, cur), 0L)
-          total = bTot.value(cur)
-        }
-        rank += 1L
-        extra.update(0, rank); extra.update(1, total)
-        joined(row, extra): InternalRow
-      }
-    }
-    org.apache.spark.sql.classic.GraftSqlInternals.internalCreateDataFrame(
-      spark, ranked, org.apache.spark.sql.types.StructType(
-        df.schema.fields
-          :+ org.apache.spark.sql.types.StructField("__grank",
-              org.apache.spark.sql.types.LongType, nullable = false)
-          :+ org.apache.spark.sql.types.StructField("__gn",
-              org.apache.spark.sql.types.LongType, nullable = false)))
   }
 
   /** Distributed EXACT prefix sums — `globalRank`'s running-sum sibling,
@@ -471,69 +484,50 @@ object Relational2 {
     * has no partition key, so WindowExec funnels the WHOLE frame through
     * one task — fine on a 64-row bucket frame, a genuine single-machine
     * bottleneck when the ordered frame tracks a value DOMAIN (distinct
-    * latencies in µs, prices in large units). Same two-job discipline as
-    * globalRank: range-repartition on the order keys + partition-local
-    * sort (the only full-data exchange), job 1 collects per-partition
-    * column sums (|partitions|×|cols| longs — metadata), job 2 assigns
-    * running sums per partition from broadcast prefix offsets. Appends
-    * `__cum_<col>` (inclusive running sum) and `__tot_<col>` (grand
-    * total) for each requested column. Columns must be non-null LongType
-    * (exact BIGINT — the callers' counts discipline); order keys must be
-    * a total order if cumulative-value identity matters across ties. */
+    * latencies in µs, prices in large units). Job 1 sums each partition's
+    * columns (|partitions|×|cols| longs), job 2 assigns running sums from
+    * the prefix offsets. Appends `__cum_<col>` (inclusive running sum) and
+    * `__tot_<col>` (grand total) for each requested column. Columns must
+    * be non-null LongType (exact BIGINT — the callers' counts discipline);
+    * order keys must be a total order if cumulative-value identity
+    * matters across ties. */
   private[graft] def prefixSums(df: DataFrame, orderKeys: Seq[Column],
                                 sumCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    val spark = df.sparkSession
     val idxs = sumCols.map(df.schema.fieldIndex).toArray
     idxs.foreach { i =>
-      require(df.schema(i).dataType ==
-        org.apache.spark.sql.types.LongType,
+      require(df.schema(i).dataType == LongType,
         s"prefixSums needs LongType, got ${df.schema(i)}")
     }
     val nc = idxs.length
-    val rdd = rangedByKeys(df, orderKeys: _*)
-      .queryExecution.toRdd                     // ONE plan, ONE shuffle dep
-    val partSums = rdd.mapPartitionsWithIndex((pid, it) => {
+    rangeScan(df, orderKeys,
+      sumCols.map(c => s"__cum_$c") ++ sumCols.map(c => s"__tot_$c")) { it =>
       val s = new Array[Long](nc)
       while (it.hasNext) {
         val r = it.next()
         var j = 0
         while (j < nc) { s(j) += r.getLong(idxs(j)); j += 1 }
       }
-      Iterator(pid -> s)                        // job 1: sums only
-    }, preservesPartitioning = true).collect().sortBy(_._1).map(_._2)
-    val totals = new Array[Long](nc)
-    val offsets = partSums.map { s =>
-      val off = totals.clone()
+      s
+    } { partSums =>
+      val totals = new Array[Long](nc)
+      val offsets = partSums.map { s =>
+        val off = totals.clone()
+        var j = 0
+        while (j < nc) { totals(j) += s(j); j += 1 }
+        off
+      }
+      (offsets, totals)
+    } { case ((offsets, totals), pid, extra) =>
+      val run = offsets(pid).clone()
       var j = 0
-      while (j < nc) { totals(j) += s(j); j += 1 }
-      off
-    }
-    val bOff = spark.sparkContext.broadcast(offsets)
-    val bTot = spark.sparkContext.broadcast(totals)
-    val ranked = rdd.mapPartitionsWithIndex { (pid, it) =>  // job 2: reuses
-      val run = bOff.value(pid).clone()                     // job 1's shuffle
-      val tot = bTot.value
-      val extra = new GenericInternalRow(2 * nc)
-      var j = 0
-      while (j < nc) { extra.update(nc + j, tot(j)); j += 1 }
-      val joined = new JoinedRow
-      it.map { row =>
+      while (j < nc) { extra.update(nc + j, totals(j)); j += 1 }
+      row => {
         var k = 0
         while (k < nc) {
           run(k) += row.getLong(idxs(k)); extra.update(k, run(k)); k += 1
         }
-        joined(row, extra): InternalRow
       }
     }
-    val longField = (n: String) => org.apache.spark.sql.types
-      .StructField(n, org.apache.spark.sql.types.LongType, nullable = false)
-    org.apache.spark.sql.classic.GraftSqlInternals.internalCreateDataFrame(
-      spark, ranked, org.apache.spark.sql.types.StructType(
-        df.schema.fields
-          ++ sumCols.map(c => longField(s"__cum_$c"))
-          ++ sumCols.map(c => longField(s"__tot_$c"))))
   }
 
   /** Global AND per-group rank in ONE range exchange — the fused kernel
@@ -541,81 +535,25 @@ object Relational2 {
     * paid globalRank + groupedRank — two range exchanges over the same
     * (v, i) order — plus a row-id join to recombine them). Range-partition
     * on `keys` ONLY (groups interleave within partitions, unlike
-    * groupedRank's (grp, keys) range); job 1 scans each sorted partition
-    * once counting total rows AND per-group rows (a hash per partition,
-    * |groups| entries — the collect is |partitions|×|groups| metadata,
-    * exactly what groupedRank already collects); the driver prefixes both
-    * count families into offsets; job 2 reuses job 1's shuffle files and
-    * attaches `__rank` (global, 1-based) and `__grank` (in-group, 1-based)
-    * from broadcast offsets plus running per-group counters. For any row,
-    * in-group rank under the restriction of the (keys) total order to its
-    * group is identical to groupedRank's (grp, keys) rank — same value,
-    * one exchange fewer and no join. EAGER (job 1 collect at plan build —
-    * riders must appear in SparkEntry.eagerQueries). */
+    * groupedRank's (grp, keys) range); job 1 counts per-group rows (a
+    * partition's total is their sum); job 2 attaches `__rank` (global,
+    * 1-based), `__n`, `__grank` (in-group, 1-based) and `__gn`. For any
+    * row, in-group rank under the restriction of the (keys) total order
+    * to its group is identical to groupedRank's (grp, keys) rank — same
+    * value, one exchange fewer and no join. */
   private[graft] def globalGroupedRank(df: DataFrame, grpField: String,
                                        keys: Column*): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.unsafe.types.UTF8String
-    val spark = df.sparkSession
-    val grpIdx = df.schema.fieldIndex(grpField)
-    val grpType = df.schema(grpField).dataType
-    val rdd = rangedByKeys(df, keys: _*)
-      .queryExecution.toRdd                     // ONE plan, ONE shuffle dep
-    def keyOf(row: InternalRow): Any = row.get(grpIdx, grpType) match {
-      case u: UTF8String => u.copy() // unsafe rows reuse the buffer
-      case x => x
-    }
-    val counts = rdd.mapPartitionsWithIndex((pid, it) => {
-      // groups interleave: count into a hash, not contiguous runs
-      val byGrp = scala.collection.mutable.HashMap.empty[Any, Long]
-      var n = 0L
-      while (it.hasNext) {
-        val k = keyOf(it.next())
-        byGrp(k) = byGrp.getOrElse(k, 0L) + 1L
-        n += 1L
-      }
-      Iterator((pid, n, byGrp.toSeq))           // job 1: counts only
-    }, preservesPartitioning = true).collect().sortBy(_._1)
-    val total = counts.map(_._2).sum
-    val gOffsets = counts.map(_._2).scanLeft(0L)(_ + _)
-    val grpOffsets = scala.collection.mutable.HashMap.empty[(Int, Any), Long]
-    val grpTotals = scala.collection.mutable.HashMap.empty[Any, Long]
-    counts.foreach { case (pid, _, seq) => seq.foreach { case (k, c) =>
-      grpOffsets((pid, k)) = grpTotals.getOrElse(k, 0L)
-      grpTotals(k) = grpTotals.getOrElse(k, 0L) + c
-    } }
-    val bG = spark.sparkContext.broadcast(gOffsets)
-    val bOff = spark.sparkContext.broadcast(grpOffsets.toMap)
-    val bTot = spark.sparkContext.broadcast(grpTotals.toMap)
-    val ranked = rdd.mapPartitionsWithIndex { (pid, it) =>  // job 2: reuses
-      var rank = bG.value(pid)                              // job 1's shuffle
-      val grkOf = scala.collection.mutable.HashMap.empty[Any, Long]
-      val extra = new GenericInternalRow(4)
+    val key = groupKey(df, grpField)
+    rangeScan(df, keys, Seq("__rank", "__n", "__grank", "__gn"))(
+      groupCounts(key)) { counts =>
+      val ns = counts.map(_.values.sum)
+      (ns.scanLeft(0L)(_ + _), ns.sum, groupOffsets(counts))
+    } { case ((offsets, total, grouped), pid, extra) =>
+      var rank = offsets(pid)
       extra.update(1, total)
-      val joined = new JoinedRow
-      it.map { row =>
-        val k = keyOf(row)
-        rank += 1L
-        val grank = grkOf.getOrElse(k, bOff.value.getOrElse((pid, k), 0L)) + 1L
-        grkOf(k) = grank
-        extra.update(0, rank)
-        extra.update(2, grank)
-        extra.update(3, bTot.value(k))
-        joined(row, extra): InternalRow
-      }
+      val inGroup = groupRanks(key, grouped, pid, extra, 2)
+      row => { rank += 1; extra.update(0, rank); inGroup(row) }
     }
-    org.apache.spark.sql.classic.GraftSqlInternals.internalCreateDataFrame(
-      spark, ranked, org.apache.spark.sql.types.StructType(
-        df.schema.fields
-          :+ org.apache.spark.sql.types.StructField("__rank",
-              org.apache.spark.sql.types.LongType, nullable = false)
-          :+ org.apache.spark.sql.types.StructField("__n",
-              org.apache.spark.sql.types.LongType, nullable = false)
-          :+ org.apache.spark.sql.types.StructField("__grank",
-              org.apache.spark.sql.types.LongType, nullable = false)
-          :+ org.apache.spark.sql.types.StructField("__gn",
-              org.apache.spark.sql.types.LongType, nullable = false)))
   }
 
   /** Exact INTERPOLATED per-group percentiles on the `groupedRank`
@@ -1576,7 +1514,3 @@ object Relational2 {
         |FROM sums ORDER BY l_returnflag""".stripMargin,
   )
 }
-
-/** Serializable sentinel for [[Relational2.groupedRank]]'s "no current
-  * group yet" state — distinct from every data value including null. */
-private[graft] case object GroupedRankUnset

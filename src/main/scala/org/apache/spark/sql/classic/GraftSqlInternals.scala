@@ -7,12 +7,15 @@ import org.apache.spark.sql.types.StructType
 /** Narrow interop shim: expose `SparkSession.internalCreateDataFrame`
   * (which is `private[sql]`) to graft code.
   *
-  * Why it exists: `Relational2.globalRank` attaches global row ranks by
-  * per-partition arithmetic over the output of ONE pinned range-shuffle
-  * lineage. Staying at the `InternalRow` level (`queryExecution.toRdd` on
-  * the way down, `internalCreateDataFrame` on the way back up) avoids two
-  * full per-row conversions — InternalRow→Row through the deserializer and
-  * Row→InternalRow through the encoder — that the public
+  * Why it exists: `Relational2.rangeScan` — the one range-offset kernel
+  * under `globalRank`, `groupedRank`, `prefixSums` and
+  * `globalGroupedRank` — attaches ranks and running sums by per-partition
+  * arithmetic over the output of ONE pinned range-shuffle lineage, and is
+  * this shim's only caller. Staying at the `InternalRow` level
+  * (`queryExecution.toRdd` on the way down, `internalCreateDataFrame` on
+  * the way back up) avoids two full per-row conversions — InternalRow→Row
+  * through the deserializer and Row→InternalRow through the encoder —
+  * that the public
   * `DataFrame.rdd` / `createDataFrame(RDD[Row], schema)` round-trip pays.
   * On a rank over 100 TB that round-trip is pure overhead proportional to
   * the data; the InternalRow path hands each shuffled row straight to the

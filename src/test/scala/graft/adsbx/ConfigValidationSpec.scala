@@ -33,6 +33,15 @@ class ConfigValidationSpec extends SparkSpec {
       AdsbxConfig(api = "https://adsbexchange-com1.p.rapidapi.com")).isRight)
   }
 
+  test("queryLatLon must be two comma-separated numbers") {
+    // each of these made every SnapshotFetcher.request poll throw
+    for (bad <- Seq("40.14401", "40.1,-119.8,3", "north,-119.8", "40.1,", ""))
+      assert(ConfigValidation.validate(AdsbxConfig(queryLatLon = bad)) ==
+        Left(Seq(s"queryLatLon: '$bad' is not 'lat,lon' (two numbers)")), bad)
+    assert(ConfigValidation.validate(
+      AdsbxConfig(queryLatLon = " 40.1 , -119.8 ")).isRight)
+  }
+
   test("DataFrame variant: quarantine split + the UNKNOWN group default") {
     import spark.implicits._
     val df = Seq(

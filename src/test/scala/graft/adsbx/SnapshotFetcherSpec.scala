@@ -65,4 +65,33 @@ class SnapshotFetcherSpec extends SparkSpec {
     assert(rows.length == 2)
     assert(rows.map(_.getAs[String]("hex")).toSeq == Seq("a1", "b2"))
   }
+
+  private def listing(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.sorted
+
+  test("fetchToLog refuses a repeated seq and keeps the first body") {
+    val dir = tempDir("fetchdup").toString
+    val first = SnapshotFetcher.fetchToLog(cfg, _ => "first", () => 1L, dir, seq = 7L)
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      SnapshotFetcher.fetchToLog(cfg, _ => "second", () => 2L, dir, seq = 7L)
+    }
+    assert(java.nio.file.Files.readString(first) == "first")
+    assert(listing(dir) == Seq("snap_000000000007.json"))
+  }
+
+  test("fetchToLog leaves no temp file behind") {
+    val dir = tempDir("fetchtmp").toString
+    SnapshotFetcher.fetchToLog(cfg, _ => "a", () => 1L, dir, seq = 0L)
+    SnapshotFetcher.fetchToLog(cfg, _ => "b", () => 2L, dir, seq = 1L)
+    assert(listing(dir) == Seq("snap_000000000000.json", "snap_000000000001.json"))
+  }
+
+  test("fetchToLog lands nothing when the transport fails") {
+    val dir = tempDir("fetchfail").toString
+    intercept[RuntimeException] {
+      SnapshotFetcher.fetchToLog(cfg, _ => throw new RuntimeException("down"),
+        () => 1L, dir, seq = 0L)
+    }
+    assert(listing(dir).isEmpty)
+  }
 }

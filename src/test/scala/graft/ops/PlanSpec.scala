@@ -36,8 +36,9 @@ class PlanSpec extends SparkSpec {
     // ntile-over-everything funnels the whole table through one task; the
     // globalRank formulation must keep the plan free of BOTH the
     // SinglePartition exchange and any Window operator. The range
-    // repartition itself sits in globalRank's internal stage (below .rdd),
-    // so it is asserted on rangedByKeys directly.
+    // repartition itself sits below the range-offset kernel's `.toRdd`
+    // pin (Relational2.rangeScan), so it is asserted on rangedByKeys
+    // directly.
     val p = plan(Relational2.queries("rel_equidepth_hist")(spark, sf))
     assert(!p.contains("SinglePartition"), s"single-partition exchange:\n$p")
     assert(!p.contains("Window"), s"window survived in plan:\n$p")
