@@ -72,6 +72,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.ops.Fs.pointStreamCheckpointsAtTmpfs(spark)
+    graft.ops.Fs.cleanupOnExit(spark)
     // session-level warmers (scheduler, codegen compiler, parquet reader)
     spark.range(1000).selectExpr("sum(id)").collect()
     Tables(spark, sfDir, "region").count()
@@ -210,6 +211,9 @@ object Bench {
         }
       } catch { case scala.util.control.NonFatal(_) => planShas(n) = "err" }
     }
+    // a plan-dump run is done once its files are written: no timed
+    // passes, no record, no line
+    if (planDump.isDefined) { spark.stop(); return }
     val PASSES = 3
     // instrument staged builds for the timed passes only: the warmup and
     // fingerprint passes above ran with the library's lazy persist (and
@@ -375,13 +379,13 @@ object Bench {
       f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec,"cpus":$cpus,"n_noisy":${noisy.size},"noisy":$noisyJson,"n_still_noisy":${stillNoisy.size},"still_noisy":$stillNoisyJson,"load_passes":$loadPasses,"staging_total":$stagingTotal%.2f,"staging_secs":$stagingJson,"staging_pass_secs":$stagingPassJson,"query_staging":$queryStagingJson,"fixture_floor":$fixtureFloorJson,"queries":${dict(results)},"pass_secs":$perPass,"plan_sha":$planShaJson,"stream_phases":$phasesJson,"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"sf":"$sfDir"}""")
     catch { case scala.util.control.NonFatal(_) => () }
     // "queries" = the 15 slowest (the outlier-audit set); full map in the
-    // file. A subset run writes no file, so its line carries the per-pass
-    // samples, staging splits, plan shas and stream phases itself.
-    val slowest = results.sortBy(-_._2).take(15)
+    // file. A subset run writes no file, so its line carries every median,
+    // the per-pass samples, staging splits, plan shas and stream phases
+    // itself.
+    val slowest = results.sortBy(-_._2).take(if (only.isEmpty) 15 else results.size)
     val lineDetail = if (only.isEmpty) "" else
       s""","staging_secs":$stagingJson,"pass_secs":$perPass,"plan_sha":$planShaJson,"stream_phases":$phasesJson"""
     println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","min_total":$minTotal%.2f,"passes":$PASSES,"stat":"median_net_plus_staging","calib_sec":$calibSec,"cpus":$cpus,"n_queries":${results.size},"n_noisy":${noisy.size},"n_still_noisy":${stillNoisy.size},"staging_total":$stagingTotal%.2f,"load_passes":$loadPasses,"queries":${dict(slowest)}$lineDetail,"load_before":"$loadBefore","load_after":"$loadAfter","wall_sec":$wall%.1f,"detail":"${if (only.isEmpty) "BENCH_LOCAL.json" else "line"}","sf":"$sfDir"}""")
-    graft.ops.Fs.cleanupAppScratch(spark)
     spark.stop()
   }
 }

@@ -20,6 +20,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.ops.Fs.pointStreamCheckpointsAtTmpfs(spark)
+    graft.ops.Fs.cleanupOnExit(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -63,7 +64,6 @@ object Verify {
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
       Files.writeString(oraclePath, merged)
     }
-    graft.ops.Fs.cleanupAppScratch(spark)
     spark.stop()
   }
 }

@@ -286,7 +286,7 @@ object CorpusOps {
          |ORDER BY pmi DESC, bigram ASC LIMIT $PMI_TOPK""".stripMargin,
     // same doc-id bucket arithmetic (BIGINT·64 / span → double → floor),
     // same vocabulary-min first-bucket aggregate, same 64-row cumulative
-    // window, and the degree-powerlaw exact-moment OLS spelling
+    // window, and the exact-moment OLS shared with graph_degree_powerlaw
     "text_heaps_law" ->
       s"""WITH d AS (
          |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
@@ -315,21 +315,7 @@ object CorpusOps {
          |  SELECT round(ln(CAST(cum_t AS DOUBLE)), 6) AS x,
          |    round(ln(CAST(cum_v AS DOUBLE)), 6) AS y
          |  FROM cum WHERE cum_t > 0 AND cum_v > 0
-         |), m AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(SUM(CAST(x AS DECIMAL(30,6))) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(y AS DECIMAL(30,6))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(x * x AS DECIMAL(30,6))) AS DOUBLE) AS sxx,
-         |    CAST(SUM(CAST(y * y AS DECIMAL(30,6))) AS DOUBLE) AS syy,
-         |    CAST(SUM(CAST(x * y AS DECIMAL(30,6))) AS DOUBLE) AS sxy
-         |  FROM pts
-         |), v AS (
-         |  SELECT n, sx, sy,
-         |    (CAST(n AS DOUBLE) * sxy - sx * sy) AS cov,
-         |    (CAST(n AS DOUBLE) * sxx - sx * sx) AS varx,
-         |    (CAST(n AS DOUBLE) * syy - sy * sy) AS vary
-         |  FROM m
-         |)
+         |), ${Exact.olsMomentsSql("pts")}
          |SELECT n AS n_points,
          |  CASE WHEN varx > 0 THEN
          |    CAST(floor((cov / varx) * 1e6 + 0.5) AS DOUBLE) / 1e6

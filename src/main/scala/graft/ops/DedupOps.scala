@@ -439,7 +439,7 @@ object DedupOps {
     * pipe_corpus_e2e) all read it. */
   private[ops] def verifiedPairs(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "vp") {
-      nearDupPairs(docs(s, dir), 0.8,
+      nearDupPairs(docs(s, dir), NEARDUP_TAU,
         (k, df) => staged(s, dir, k)(df))
     }
 
@@ -926,6 +926,69 @@ object DedupOps {
     s"bands AS ($rows)"
   }
 
+  /** The LSH candidates `pairs(d1, d2)`: every doc pair sharing a bucket
+    * in any band, after the tok3/sig/bands chain. */
+  private[graft] val pairsCtes =
+    s"""$tok3Cte, $sigCte, $bandsCte,
+       |pairs AS (
+       |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+       |)""".stripMargin
+
+  /** `pairsCtes` plus each doc's shingle count `cnt(doc_id, n)` and each
+    * candidate's shingle overlap `inter(d1, d2, i)` (zero-overlap pairs
+    * absent). */
+  private val overlapCtes =
+    s"""$pairsCtes, cnt AS (SELECT doc_id, COUNT(*) AS n FROM tok3 GROUP BY 1),
+       |inter AS (
+       |  SELECT p.d1, p.d2, COUNT(*) AS i
+       |  FROM pairs p
+       |  JOIN tok3 t1 ON t1.doc_id = p.d1
+       |  JOIN tok3 t2 ON t2.doc_id = p.d2 AND t2.w = t1.w
+       |  GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** `overlapCtes` plus the verified near-dups `vp(d1, d2, jaccard)`:
+    * candidates whose exact shingle Jaccard is at least NEARDUP_TAU — the
+    * oracle twin of `verifiedPairs`. */
+  private val verifiedCtes =
+    s"""$overlapCtes, vp AS (
+       |  SELECT d1, d2,
+       |    CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) AS jaccard
+       |  FROM inter
+       |  JOIN cnt c1 ON d1 = c1.doc_id
+       |  JOIN cnt c2 ON d2 = c2.doc_id
+       |  WHERE CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) >= $NEARDUP_TAU
+       |)""".stripMargin
+
+  /** `reach(u, r)`: each node of the symmetric edge CTE `edges(u, v)`
+    * paired with every node it reaches, so `MIN(r)` per `u` is its
+    * component's min id — the oracle twin of `clusterPairs`. Needs
+    * `WITH RECURSIVE`. */
+  private[graft] def reachCte(edges: String): String =
+    s"""reach(u, r) AS (
+       |  SELECT u, u FROM (SELECT DISTINCT u FROM $edges)
+       |  UNION
+       |  SELECT e.u, reach.r FROM $edges e JOIN reach ON e.v = reach.u
+       |)""".stripMargin
+
+  /** `verifiedCtes` plus its undirected edges and their `reach` closure. */
+  private[graft] val verifiedReachCtes =
+    s"""$verifiedCtes, edges AS (
+       |  SELECT d1 AS u, d2 AS v FROM vp UNION SELECT d2, d1 FROM vp
+       |), ${reachCte("edges")}""".stripMargin
+
+  // the 16-bit simhash's per-doc bit votes `bitsums(doc_id, b1..b16)` over
+  // distinct whitespace tokens (bit i from md5 hex digit i's low bit)
+  private val simhash16Ctes = {
+    val bitSums = (1 to 16).map(i =>
+      s"SUM(CASE WHEN substr(md5(w), $i, 1) IN ('1','3','5','7','9','b','d','f') THEN 1 ELSE -1 END) AS b$i")
+      .mkString(", ")
+    s"""tok1 AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+       |bitsums AS (SELECT doc_id, $bitSums FROM tok1 GROUP BY doc_id)""".stripMargin
+  }
+
   val oracles: Map[String, String] = Map(
     // the same gear states from the SAME embedded 256-entry table, same
     // cut class (top 4 bits zero ⇔ h < 2^28), boundary pairs, chunk md5,
@@ -1040,26 +1103,8 @@ object DedupOps {
          |FROM bands GROUP BY 1, 2 HAVING COUNT(*) > 1
          |ORDER BY band, bucket""".stripMargin,
     "dedup_lsh_neardup" ->
-      s"""WITH $tok3Cte, $sigCte, $bandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |), cnt AS (SELECT doc_id, COUNT(*) AS n FROM tok3 GROUP BY 1),
-         |inter AS (
-         |  SELECT p.d1, p.d2, COUNT(*) AS i
-         |  FROM pairs p
-         |  JOIN tok3 t1 ON t1.doc_id = p.d1
-         |  JOIN tok3 t2 ON t2.doc_id = p.d2 AND t2.w = t1.w
-         |  GROUP BY 1, 2
-         |)
-         |SELECT d1, d2,
-         |  CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) AS jaccard
-         |FROM inter
-         |JOIN cnt c1 ON d1 = c1.doc_id
-         |JOIN cnt c2 ON d2 = c2.doc_id
-         |WHERE CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) >= 0.8
-         |ORDER BY d1, d2""".stripMargin,
+      s"""WITH $verifiedCtes
+         |SELECT d1, d2, jaccard FROM vp ORDER BY d1, d2""".stripMargin,
     // same three re-bandings of the same sig chunks, same distinct pair
     // union, exact Jaccard once via the tok3 join (LEFT for zero-overlap
     // collisions), same r6 precision / relative-recall spellings
@@ -1120,19 +1165,7 @@ object DedupOps {
       val agree = (0 until N_MINHASH)
         .map(i => s"(CASE WHEN s1.mh$i = s2.mh$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
-      s"""WITH $tok3Cte, $sigCte, $bandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |), cnt AS (SELECT doc_id, COUNT(*) AS n FROM tok3 GROUP BY 1),
-         |inter AS (
-         |  SELECT p.d1, p.d2, COUNT(*) AS i
-         |  FROM pairs p
-         |  JOIN tok3 t1 ON t1.doc_id = p.d1
-         |  JOIN tok3 t2 ON t2.doc_id = p.d2 AND t2.w = t1.w
-         |  GROUP BY 1, 2
-         |), scored AS (
+      s"""WITH $overlapCtes, scored AS (
          |  SELECT CAST($agree AS DOUBLE) / ${N_MINHASH}.0 AS est,
          |    CAST(COALESCE(i.i, 0) AS DOUBLE) /
          |      CAST(c1.n + c2.n - COALESCE(i.i, 0) AS DOUBLE) AS jaccard
@@ -1151,66 +1184,18 @@ object DedupOps {
     // cluster_id = min reachable node == the recursive closure's per-node
     // minimum
     "dedup_clusters" ->
-      s"""WITH RECURSIVE $tok3Cte, $sigCte, $bandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |), cnt AS (SELECT doc_id, COUNT(*) AS n FROM tok3 GROUP BY 1),
-         |inter AS (
-         |  SELECT p.d1, p.d2, COUNT(*) AS i
-         |  FROM pairs p
-         |  JOIN tok3 t1 ON t1.doc_id = p.d1
-         |  JOIN tok3 t2 ON t2.doc_id = p.d2 AND t2.w = t1.w
-         |  GROUP BY 1, 2
-         |), vp AS (
-         |  SELECT d1, d2 FROM inter
-         |  JOIN cnt c1 ON d1 = c1.doc_id
-         |  JOIN cnt c2 ON d2 = c2.doc_id
-         |  WHERE CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) >= 0.8
-         |), edges AS (
-         |  SELECT d1 AS u, d2 AS v FROM vp UNION SELECT d2, d1 FROM vp
-         |), reach(u, r) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-         |)
+      s"""WITH RECURSIVE $verifiedReachCtes
          |SELECT u AS doc_id, MIN(r) AS cluster_id
          |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
     // same closure as dedup_clusters, edges keep their verify Jaccard;
     // density/means spelled once, min order-free
     "dedup_cluster_quality" -> {
       def r6s(x: String) = s"CAST(floor(($x) * 1e6 + 0.5) AS DOUBLE) / 1e6"
-      s"""WITH RECURSIVE $tok3Cte, $sigCte, $bandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |), cnt AS (SELECT doc_id, COUNT(*) AS n FROM tok3 GROUP BY 1),
-         |inter AS (
-         |  SELECT p.d1, p.d2, COUNT(*) AS i
-         |  FROM pairs p
-         |  JOIN tok3 t1 ON t1.doc_id = p.d1
-         |  JOIN tok3 t2 ON t2.doc_id = p.d2 AND t2.w = t1.w
-         |  GROUP BY 1, 2
-         |), vp AS (
-         |  SELECT d1, d2,
-         |    CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) AS jac
-         |  FROM inter
-         |  JOIN cnt c1 ON d1 = c1.doc_id
-         |  JOIN cnt c2 ON d2 = c2.doc_id
-         |  WHERE CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) >= 0.8
-         |), edges AS (
-         |  SELECT d1 AS u, d2 AS v FROM vp UNION SELECT d2, d1 FROM vp
-         |), reach(u, r) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-         |), cl AS (
+      s"""WITH RECURSIVE $verifiedReachCtes, cl AS (
          |  SELECT u AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY u
          |), ed AS (
          |  SELECT cl.cluster_id, CAST(COUNT(*) AS BIGINT) AS n_edges,
-         |    ${Exact.avgSql(r6s("jac"))} AS mj, MIN(jac) AS minj
+         |    ${Exact.avgSql(r6s("jaccard"))} AS mj, MIN(jaccard) AS minj
          |  FROM vp JOIN cl ON vp.d1 = cl.doc_id GROUP BY 1
          |), mem AS (
          |  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
@@ -1227,30 +1212,7 @@ object DedupOps {
     // same closure as dedup_clusters, then argmax(n_toks, min doc_id)
     // keeper per component
     "dedup_keeper_quality" ->
-      s"""WITH RECURSIVE $tok3Cte, $sigCte, $bandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |), cnt AS (SELECT doc_id, COUNT(*) AS n FROM tok3 GROUP BY 1),
-         |inter AS (
-         |  SELECT p.d1, p.d2, COUNT(*) AS i
-         |  FROM pairs p
-         |  JOIN tok3 t1 ON t1.doc_id = p.d1
-         |  JOIN tok3 t2 ON t2.doc_id = p.d2 AND t2.w = t1.w
-         |  GROUP BY 1, 2
-         |), vp AS (
-         |  SELECT d1, d2 FROM inter
-         |  JOIN cnt c1 ON d1 = c1.doc_id
-         |  JOIN cnt c2 ON d2 = c2.doc_id
-         |  WHERE CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE) >= 0.8
-         |), edges AS (
-         |  SELECT d1 AS u, d2 AS v FROM vp UNION SELECT d2, d1 FROM vp
-         |), reach(u, r) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-         |), comp AS (
+      s"""WITH RECURSIVE $verifiedReachCtes, comp AS (
          |  SELECT u AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY u
          |), rked AS (
          |  SELECT c.cluster_id, c.doc_id,
@@ -1285,12 +1247,7 @@ object DedupOps {
          |               CAST(i AS DOUBLE) / CAST(c2.n AS DOUBLE)) >= $CONT_THR
          |ORDER BY d1, d2""".stripMargin,
     "dedup_ngram_jaccard" ->
-      s"""WITH $tok3Cte, $sigCte, $bandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |), gs AS (
+      s"""WITH $pairsCtes, gs AS (
          |  SELECT doc_id, ${charNgramSetSql("text", NGRAM)} AS g
          |  FROM documents
          |), inter AS (
@@ -1305,27 +1262,19 @@ object DedupOps {
          |WHERE CAST(i AS DOUBLE) / CAST(n1 + n2 - i AS DOUBLE) >= 0.7
          |ORDER BY d1, d2""".stripMargin,
     "dedup_simhash" -> {
-      val bitSums = (1 to 16).map(i =>
-        s"SUM(CASE WHEN substr(md5(w), $i, 1) IN ('1','3','5','7','9','b','d','f') THEN 1 ELSE -1 END) AS b$i")
-        .mkString(", ")
       val bits = (1 to 16).map(i =>
         s"CASE WHEN b$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-      s"""WITH tok1 AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-         |bitsums AS (SELECT doc_id, $bitSums FROM tok1 GROUP BY doc_id)
+      s"""WITH $simhash16Ctes
          |SELECT doc_id, $bits AS simhash16 FROM bitsums ORDER BY doc_id""".stripMargin
     },
     // BRUTE-FORCE all-pairs count by Hamming distance (test-scale only):
     // count equality with the chunk-index side proves pigeonhole
     // completeness, since every Spark-emitted candidate is exact-verified
     "dedup_simhash_pairs" -> {
-      val bitSums = (1 to 16).map(i =>
-        s"SUM(CASE WHEN substr(md5(w), $i, 1) IN ('1','3','5','7','9','b','d','f') THEN 1 ELSE -1 END) AS b$i")
-        .mkString(", ")
       // bit 1 is the most significant: shval = sum of 2^(16-i) for set bits
       val shval = (1 to 16).map(i =>
         s"(CASE WHEN b$i > 0 THEN ${1L << (16 - i)} ELSE 0 END)").mkString(" + ")
-      s"""WITH tok1 AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-         |bitsums AS (SELECT doc_id, $bitSums FROM tok1 GROUP BY doc_id),
+      s"""WITH $simhash16Ctes,
          |sh AS (SELECT doc_id, $shval AS shval FROM bitsums)
          |SELECT CAST(bit_count(xor(a.shval, b.shval)) AS BIGINT) AS hamming,
          |  CAST(COUNT(*) AS BIGINT) AS n_pairs

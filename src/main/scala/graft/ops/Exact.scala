@@ -45,6 +45,27 @@ object Exact {
   final case class OlsFit(moments: DataFrame, varx: Column, vary: Column,
                           slope: Column, intercept: Column, corr: Column)
 
+  /** DuckDB twin of `olsFit`'s moments over a points CTE `pts(x, y)`: `m`
+    * holds `n` and the five exact power sums, `v` holds `n`, `sx`, `sy`
+    * and the `cov`, `varx`, `vary` terms (n² × (co)variance); each oracle
+    * spells its own final SELECT. */
+  def olsMomentsSql(pts: String): String =
+    s"""m AS (
+       |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+       |    CAST(SUM(CAST(x AS DECIMAL(30,6))) AS DOUBLE) AS sx,
+       |    CAST(SUM(CAST(y AS DECIMAL(30,6))) AS DOUBLE) AS sy,
+       |    CAST(SUM(CAST(x * x AS DECIMAL(30,6))) AS DOUBLE) AS sxx,
+       |    CAST(SUM(CAST(y * y AS DECIMAL(30,6))) AS DOUBLE) AS syy,
+       |    CAST(SUM(CAST(x * y AS DECIMAL(30,6))) AS DOUBLE) AS sxy
+       |  FROM $pts
+       |), v AS (
+       |  SELECT n, sx, sy,
+       |    (CAST(n AS DOUBLE) * sxy - sx * sy) AS cov,
+       |    (CAST(n AS DOUBLE) * sxx - sx * sx) AS varx,
+       |    (CAST(n AS DOUBLE) * syy - sy * sy) AS vary
+       |  FROM m
+       |)""".stripMargin
+
   def olsFit(pts: DataFrame): OlsFit = {
     val (x, y) = (col("x"), col("y"))
     val m = pts.agg(count(lit(1)).as("n"),

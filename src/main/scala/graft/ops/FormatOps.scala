@@ -1470,6 +1470,17 @@ object FormatOps {
     "src_schema_evolution" -> schemaEvolution,
   )
 
+  // the orders of every customer not deleted (c_custkey % 97 = 0 goes) —
+  // the oracle of both delete paths
+  private val deletedCustomersSql =
+    s"""SELECT o_orderstatus, COUNT(*) AS n,
+       |  ${sumSql("o_totalprice")} AS sum_price,
+       |  COUNT(DISTINCT o_custkey) AS n_cust
+       |FROM orders
+       |WHERE o_custkey NOT IN (
+       |  SELECT c_custkey FROM customer WHERE c_custkey % 97 = 0)
+       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // the quarter filter spelled statically over the raw table — the
     // runtime-pruned join must read exactly these three months
@@ -1514,14 +1525,7 @@ object FormatOps {
          |ORDER BY version, o_orderstatus, o_orderpriority""".stripMargin,
     // same survivor set as the copy-on-write delete — the two delete
     // paths (rewrite vs deletion vector) must agree bit-for-bit
-    "src_delete_vectors" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n,
-         |  ${sumSql("o_totalprice")} AS sum_price,
-         |  COUNT(DISTINCT o_custkey) AS n_cust
-         |FROM orders
-         |WHERE o_custkey NOT IN (
-         |  SELECT c_custkey FROM customer WHERE c_custkey % 97 = 0)
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+    "src_delete_vectors" -> deletedCustomersSql,
     // serial application of both merge batches in either order (they
     // commute): %7 updated unless %11 deleted it, %13 inserted shifted —
     // the same composed change set as rel_upsert, reached through two
@@ -1538,14 +1542,7 @@ object FormatOps {
          |)
          |SELECT o_orderstatus, COUNT(*) AS n, ${sumSql("o_totalprice")} AS sum_price
          |FROM merged GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-    "src_gdpr_delete" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n,
-         |  ${sumSql("o_totalprice")} AS sum_price,
-         |  COUNT(DISTINCT o_custkey) AS n_cust
-         |FROM orders
-         |WHERE o_custkey NOT IN (
-         |  SELECT c_custkey FROM customer WHERE c_custkey % 97 = 0)
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+    "src_gdpr_delete" -> deletedCustomersSql,
     // each version reconstructed by its defining predicate — v1 matching
     // proves the pinned read did NOT see v2's rows
     "src_time_travel" ->

@@ -33,16 +33,19 @@ object Fs {
 
   private def tmpBase(): String = System.getProperty("java.io.tmpdir", "/tmp")
 
-  /** Delete every scratch directory this application created (checkpoints
-    * + stream scratch on tmpfs, staged serve indexes under java.io.tmpdir
-    * — all suffixed with the applicationId) — called by the harness mains
-    * before session stop so repeated runs in one container don't
-    * accumulate dead state in RAM-backed storage or /tmp. */
-  def cleanupAppScratch(s: org.apache.spark.sql.SparkSession): Unit =
-    cleanupAppScratch(s.sparkContext.applicationId)
+  /** Run `cleanupAppScratch` for this session's app when the JVM exits,
+    * however it exits — how the harness mains and the specs keep repeated
+    * runs in one container from accumulating dead state in RAM-backed
+    * storage or /tmp. The id is read now, so the hook may run after
+    * Spark's own hook has stopped the session. */
+  def cleanupOnExit(s: org.apache.spark.sql.SparkSession): Unit = {
+    val appId = s.sparkContext.applicationId
+    sys.addShutdownHook(cleanupAppScratch(appId))
+  }
 
-  /** `cleanupAppScratch` by application id — for a JVM shutdown hook,
-    * which may run after Spark's own hook has stopped the session. */
+  /** Delete every scratch directory application `appId` created
+    * (checkpoints + stream scratch on tmpfs, staged serve indexes under
+    * java.io.tmpdir — all suffixed with the applicationId). */
   def cleanupAppScratch(appId: String): Unit = {
     Seq(tmpfsBase(), tmpBase())
       .distinct.map(new java.io.File(_)).foreach { base =>

@@ -411,11 +411,7 @@ object GeoOps {
          |  SELECT a.cid AS u, b.cid AS v FROM cells a JOIN cells b
          |  ON abs(a.cla - b.cla) <= 1 AND abs(a.clo - b.clo) <= 1
          |    AND a.cid <> b.cid
-         |), reach(u, r) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM und)
-         |  UNION
-         |  SELECT e.u, reach.r FROM und e JOIN reach ON e.v = reach.u
-         |), lab AS (
+         |), ${DedupOps.reachCte("und")}, lab AS (
          |  SELECT u AS cid, MIN(r) AS cluster_id FROM reach GROUP BY u
          |), allLab AS (
          |  SELECT cid, cluster_id FROM lab

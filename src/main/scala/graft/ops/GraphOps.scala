@@ -63,6 +63,18 @@ object GraphOps {
       |    AND l_orderkey % 2000 <> (l_orderkey * 7 + l_partkey) % 2000
       |)""".stripMargin
 
+  // `edges` as undirected pairs `und(u < v)` and each node's degree `deg`
+  private val undDegCtes: String =
+    s"""$edgesSql,
+       |und AS (
+       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+       |  FROM edges
+       |), deg AS (
+       |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
+       |    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
+       |  ) GROUP BY node
+       |)""".stripMargin
+
   /** Fixed-point scale: 1e15 units = rank 1.0. Total mass <= 1e15 keeps
     * every intermediate (85 * sum < 8.5e16) far inside BIGINT range, and
     * unit counts <= 1e15 < 2^53 cast to DOUBLE exactly for display. */
@@ -848,28 +860,14 @@ object GraphOps {
          |  SELECT round(ln(CAST(deg AS DOUBLE)), 6) AS x,
          |    round(ln(CAST(n_nodes AS DOUBLE)), 6) AS y
          |  FROM hist
-         |), m AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(SUM(CAST(x AS DECIMAL(30,6))) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(y AS DECIMAL(30,6))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(x * x AS DECIMAL(30,6))) AS DOUBLE) AS sxx,
-         |    CAST(SUM(CAST(y * y AS DECIMAL(30,6))) AS DOUBLE) AS syy,
-         |    CAST(SUM(CAST(x * y AS DECIMAL(30,6))) AS DOUBLE) AS sxy
-         |  FROM pts
-         |), f AS (
-         |  SELECT n, CAST(n AS DOUBLE) AS nd, sx AS sxd, sy AS syd,
-         |    CAST(n AS DOUBLE) * sxy - sx * sy AS cov,
-         |    CAST(n AS DOUBLE) * sxx - sx * sx AS varx,
-         |    CAST(n AS DOUBLE) * syy - sy * sy AS vary
-         |  FROM m
-         |)
+         |), ${Exact.olsMomentsSql("pts")}
          |SELECT n AS n_points,
          |  CAST(floor((cov / varx) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS slope,
-         |  CAST(floor(((syd - (cov / varx) * sxd) / nd) * 1e6 + 0.5) AS DOUBLE) / 1e6
-         |    AS intercept,
+         |  CAST(floor(((sy - (cov / varx) * sx) / CAST(n AS DOUBLE)) * 1e6 + 0.5)
+         |    AS DOUBLE) / 1e6 AS intercept,
          |  CAST(floor((cov / sqrt(varx * vary)) * 1e6 + 0.5) AS DOUBLE) / 1e6
          |    AS corr
-         |FROM f""".stripMargin,
+         |FROM v""".stripMargin,
     // hop-bounded path enumeration + MIN — the formulation the frontier
     // relaxation avoids (exponential in path multiplicity); integer
     // weights make every path sum exact in both engines
@@ -930,11 +928,7 @@ object GraphOps {
          |und AS (
          |  SELECT src AS u, dst AS v FROM edges
          |  UNION SELECT dst, src FROM edges
-         |), reach(u, r) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM und)
-         |  UNION
-         |  SELECT e.u, reach.r FROM und e JOIN reach ON e.v = reach.u
-         |), lab AS (
+         |), ${DedupOps.reachCte("und")}, lab AS (
          |  SELECT u, MIN(r) AS component_id FROM reach GROUP BY u
          |)
          |SELECT component_id, COUNT(*) AS n_nodes
@@ -989,15 +983,7 @@ object GraphOps {
          |ORDER BY node""".stripMargin
     },
     "graph_assortativity" ->
-      s"""WITH $edgesSql,
-         |und AS (
-         |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-         |  FROM edges
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
-         |  ) GROUP BY node
-         |), wd AS (
+      s"""WITH $undDegCtes, wd AS (
          |  SELECT du.deg AS du, dv.deg AS dv
          |  FROM und JOIN deg du ON und.u = du.node
          |    JOIN deg dv ON und.v = dv.node
@@ -1026,15 +1012,7 @@ object GraphOps {
          |    AS assortativity
          |FROM f""".stripMargin,
     "graph_clustering_coeff" ->
-      s"""WITH $edgesSql,
-         |und AS (
-         |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-         |  FROM edges
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
-         |  ) GROUP BY node
-         |), tri AS (
+      s"""WITH $undDegCtes, tri AS (
          |  SELECT ab.u AS a, ab.v AS b, bc.v AS c
          |  FROM und ab JOIN und bc ON ab.v = bc.u
          |    JOIN und ac ON ab.u = ac.u AND bc.v = ac.v

@@ -155,8 +155,8 @@ object PipelineOps {
     "pipe_corpus_e2e" -> pipeCorpusE2eQ,
   )
 
-  /** The full-dataflow DuckDB replay: dedup closure (the dedup_clusters /
-    * dedup_keeper_quality spelling), PII redaction of the keepers (the
+  /** The full-dataflow DuckDB replay: dedup closure (DedupOps'
+    * `verifiedReachCtes`, shared with dedup_clusters), PII redaction of the keepers (the
     * text_pii_redact spelling), the unrolled GD training (TrainOps'
     * header + step CTEs, verbatim — shared strings, not copies), scoring
     * of the redacted keepers with the final weights (the
@@ -168,31 +168,7 @@ object PipelineOps {
       val steps = (0 until TrainOps.STEPS).map(TrainOps.stepSql).mkString
       val W = s"w${TrainOps.STEPS}"
       val Bb = s"b${TrainOps.STEPS}"
-      s"""WITH RECURSIVE ${DedupOps.tok3Cte}, ${DedupOps.sigCte}, ${DedupOps.bandsCte},
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |), cnt AS (SELECT doc_id, COUNT(*) AS n FROM tok3 GROUP BY 1),
-         |inter AS (
-         |  SELECT p.d1, p.d2, COUNT(*) AS i
-         |  FROM pairs p
-         |  JOIN tok3 t1 ON t1.doc_id = p.d1
-         |  JOIN tok3 t2 ON t2.doc_id = p.d2 AND t2.w = t1.w
-         |  GROUP BY 1, 2
-         |), vpp AS (
-         |  SELECT d1, d2 FROM inter
-         |  JOIN cnt c1 ON d1 = c1.doc_id
-         |  JOIN cnt c2 ON d2 = c2.doc_id
-         |  WHERE CAST(i AS DOUBLE) / CAST(c1.n + c2.n - i AS DOUBLE)
-         |    >= ${DedupOps.NEARDUP_TAU}
-         |), edges AS (
-         |  SELECT d1 AS u, d2 AS v FROM vpp UNION SELECT d2, d1 FROM vpp
-         |), reach(u, r) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-         |), comp AS (
+      s"""WITH RECURSIVE ${DedupOps.verifiedReachCtes}, comp AS (
          |  SELECT u AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY u
          |), rked AS (
          |  SELECT c.cluster_id, c.doc_id,

@@ -1981,6 +1981,11 @@ object Similarity {
   // sequential left folds mirroring the Spark HOFs exactly
   private val dotSql =
     "list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*qv[i]), (a,x) -> a+x)"
+  // the same fold over aliased rows: a pair (a, b), a candidate and a probe (a, p)
+  private val dotABSql =
+    "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)"
+  private[ops] val dotAPSql =
+    "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*p.qv[i]), (x,y) -> x+y)"
   private val normSql =
     "sqrt(list_reduce(list_transform(v, x -> x*x), (a,x) -> a+x))"
   private val bucketSql = LSH_DIMS.map(d =>
@@ -2041,8 +2046,7 @@ object Similarity {
        |) WHERE rk <= $K ORDER BY q_id, rk""".stripMargin
 
   private lazy val annPqServeSql: String =
-    s"""WITH $eCte,
-       |${quantizerRankedCtesSql},
+    s"""WITH $quantizerRankedCtesSql,
        |qp AS (
        |  SELECT vec_id AS q_id, label AS cell FROM qranked
        |  WHERE vec_id < $N_QUERIES AND crk <= $NPROBE
@@ -2106,70 +2110,59 @@ object Similarity {
        |  sqrt(list_reduce(list_transform(embedding::DOUBLE[], x -> x*x), (a,x) -> a+x)) AS nrm
        |  FROM embeddings)""".stripMargin
 
-  /** Shared with TextOps's hybrid-retrieval oracle: the semantic arm
-    * replays the same embedding CTE and quantizer-cell ranking as
-    * sim_ann_ivf (CTE named `qranked` to avoid collisions with the text
-    * CTEs it composes with). */
-  private[ops] def eCteSql: String = eCte
-
-  // the dedup_semantic assignment replay (embeddings → label centroids →
-  // nearest-cell assignment), shared by the dedup_semantic oracle and the
-  // threshold-sweep oracle so the chain is spelled once
-  private val semDotAB =
-    "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)"
-
-  private lazy val semAssignedCtes: String = {
-    val dotAC =
-      "list_reduce(list_transform(generate_series(1, len(e.v)), i -> e.v[i]*c.cv[i]), (a,x) -> a+x)"
+  /** `e`, its cells `ex(vec_id, label, dim, val)`, and each label's exact
+    * per-dimension mean `centd(label, dim, c)`. */
+  private val centdCtes =
     s"""$eCte,
        |ex AS (
-       |  SELECT label, i AS dim, v[i] AS val
+       |  SELECT vec_id, label, i AS dim, v[i] AS val
        |  FROM e, unnest(generate_series(1, len(v))) AS t(i)
        |), centd AS (
        |  SELECT label, dim,
        |    CAST(SUM(CAST(val AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS c
        |  FROM ex GROUP BY 1, 2
-       |), cent AS (
-       |  SELECT label, list(c ORDER BY dim) AS cv FROM centd GROUP BY label
-       |), centn AS (
-       |  SELECT label, cv,
-       |    sqrt(list_reduce(list_transform(cv, x -> x*x), (a,x) -> a+x)) AS cn
-       |  FROM cent
-       |), cs AS (
-       |  SELECT e.vec_id, e.v, e.nrm, c.label,
-       |    round($dotAC / (e.nrm * c.cn), 6) AS csim
-       |  FROM e CROSS JOIN centn c
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY csim DESC, label ASC) AS crk FROM cs
-       |), assigned AS (
-       |  SELECT vec_id, label AS cell, v, nrm, csim FROM ranked WHERE crk = 1
        |)""".stripMargin
-  }
 
+  /** The quantizer-cell ranking shared by the IVF, k-NN, semantic-dedup
+    * and (TextOps) hybrid-retrieval oracles: `centdCtes`, the label
+    * centroids `centn(label, cv, cn)`, then `qranked` — every (vector,
+    * cell) pair with the vector's own label `vlabel`, its cosine to the
+    * centroid `csim` (6 dp), and the cell's rank `crk` for that vector
+    * (csim desc, label asc). The `q` names keep clear of the text CTEs
+    * the hybrid oracles compose with. */
   private[ops] val quantizerRankedCtesSql: String = {
     val dotAC =
       "list_reduce(list_transform(generate_series(1, len(e.v)), i -> e.v[i]*c.cv[i]), (a,x) -> a+x)"
-    s"""ex AS (
-       |  SELECT label, i AS dim, v[i] AS val
-       |  FROM e, unnest(generate_series(1, len(v))) AS t(i)
-       |), centd AS (
-       |  SELECT label, dim,
-       |    CAST(SUM(CAST(val AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS c
-       |  FROM ex GROUP BY 1, 2
-       |), cent AS (
+    s"""$centdCtes, cent AS (
        |  SELECT label, list(c ORDER BY dim) AS cv FROM centd GROUP BY label
        |), centn AS (
        |  SELECT label, cv,
        |    sqrt(list_reduce(list_transform(cv, x -> x*x), (a,x) -> a+x)) AS cn
        |  FROM cent
-       |), qranked AS (
-       |  SELECT e.vec_id, e.v, e.nrm, c.label,
-       |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |      round($dotAC / (e.nrm * c.cn), 6) DESC, c.label ASC) AS crk
+       |), qcs AS (
+       |  SELECT e.vec_id, e.v, e.nrm, e.label AS vlabel, c.label,
+       |    round($dotAC / (e.nrm * c.cn), 6) AS csim
        |  FROM e CROSS JOIN centn c
+       |), qranked AS (
+       |  SELECT *, row_number() OVER (PARTITION BY vec_id
+       |    ORDER BY csim DESC, label ASC) AS crk FROM qcs
        |)""".stripMargin
   }
+
+  /** Each vector's nearest cell `assigned(vec_id, cell, v, nrm, csim)` —
+    * the dedup_semantic replay, also the k-NN graph's cells. */
+  private val assignedCtes =
+    s"""$quantizerRankedCtesSql, assigned AS (
+       |  SELECT vec_id, label AS cell, v, nrm, csim FROM qranked WHERE crk = 1
+       |)""".stripMargin
+
+  /** Each query's top K rows of `scored` (sim desc, vec_id asc), selected
+    * as `cols`. */
+  private def topKSql(cols: String) =
+    s"""SELECT $cols FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
+       |  FROM scored
+       |) WHERE rk <= $K ORDER BY q_id, rk""".stripMargin
 
   private val cosineTopkSql =
     s"""WITH $eCte,
@@ -2178,10 +2171,7 @@ object Similarity {
          |  SELECT q.q_id, e.vec_id, round($dotSql / (e.nrm * q.qn), 6) AS sim
          |  FROM e CROSS JOIN q WHERE e.vec_id >= $N_QUERIES
          |)
-         |SELECT q_id, rk, vec_id, sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-         |  FROM scored
-         |) WHERE rk <= $K ORDER BY q_id, rk""".stripMargin
+         |${topKSql("q_id, rk, vec_id, sim")}""".stripMargin
 
   /** The sim_mmr_rerank oracle: candidate + pairwise-sim CTEs, then the K
     * greedy steps unrolled as a generated CTE ladder (sel_t picks the
@@ -2193,8 +2183,6 @@ object Similarity {
       s"CAST('${new java.math.BigDecimal(x).toPlainString}' AS DOUBLE)"
     val lam = dlit(MMR_LAM)
     val gam = dlit(1.0 - MMR_LAM)
-    val pairDot =
-      "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)"
     val steps = (2 to MMR_K).map { t =>
       s"""sel$t AS (
          |  SELECT q_id, CAST($t AS BIGINT) AS step, vec_id, rel, maxsim, mmr FROM (
@@ -2229,7 +2217,7 @@ object Similarity {
        |cv AS (SELECT c.q_id, c.vec_id, e.v, e.nrm FROM cand c JOIN e USING (vec_id)),
        |pairs AS (
        |  SELECT a.q_id, a.vec_id AS a_id, b.vec_id AS b_id,
-       |    round($pairDot / (a.nrm * b.nrm), 6) AS psim
+       |    round($dotABSql / (a.nrm * b.nrm), 6) AS psim
        |  FROM cv a JOIN cv b ON a.q_id = b.q_id AND a.vec_id <> b.vec_id
        |),
        |sel1 AS (
@@ -2257,10 +2245,7 @@ object Similarity {
          |  FROM e CROSS JOIN q
          |  WHERE e.vec_id >= $N_QUERIES AND e.label % $FILTER_MOD = 0
          |)
-         |SELECT q_id, rk, vec_id, sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-         |  FROM scored
-         |) WHERE rk <= $K ORDER BY q_id, rk""".stripMargin
+         |${topKSql("q_id, rk, vec_id, sim")}""".stripMargin
 
   private val annLshSql =
     s"""WITH $eCte,
@@ -2270,55 +2255,30 @@ object Similarity {
          |  SELECT q.q_id, eb.bkt, eb.vec_id, round($dotSql / (eb.nrm * q.qn), 6) AS sim
          |  FROM eb JOIN q ON eb.bkt = q.qbkt WHERE eb.vec_id >= $N_QUERIES
          |)
-         |SELECT q_id, bkt, rk, vec_id, sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-         |  FROM scored
-         |) WHERE rk <= $K ORDER BY q_id, rk""".stripMargin
+         |${topKSql("q_id, bkt, rk, vec_id, sim")}""".stripMargin
 
-  /** sim_ann_ivf's oracle, with an optional extra predicate on the
-    * indexed candidates — `extraAssignedPred` (e.g. "AND vec_id % 17 <> 0")
-    * turns it into the 'full rebuild minus the deleted ids' truth that
-    * sim_ann_delete's merge-on-read serve must equal. */
-  private def annIvfSqlWhere(extraAssignedPred: String) = {
-      val dotAC =
-        "list_reduce(list_transform(generate_series(1, len(e.v)), i -> e.v[i]*c.cv[i]), (a,x) -> a+x)"
-      val dotAQ =
-        "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*p.qv[i]), (x,y) -> x+y)"
-      s"""WITH $eCte,
-         |ex AS (
-         |  SELECT label, i AS dim, v[i] AS val
-         |  FROM e, unnest(generate_series(1, len(v))) AS t(i)
-         |), centd AS (
-         |  SELECT label, dim,
-         |    CAST(SUM(CAST(val AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS c
-         |  FROM ex GROUP BY 1, 2
-         |), cent AS (
-         |  SELECT label, list(c ORDER BY dim) AS cv FROM centd GROUP BY label
-         |), centn AS (
-         |  SELECT label, cv,
-         |    sqrt(list_reduce(list_transform(cv, x -> x*x), (a,x) -> a+x)) AS cn
-         |  FROM cent
-         |), ranked AS (
-         |  SELECT e.vec_id, e.v, e.nrm, c.label,
-         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |      round($dotAC / (e.nrm * c.cn), 6) DESC, c.label ASC) AS crk
-         |  FROM e CROSS JOIN centn c
-         |), assigned AS (
-         |  SELECT vec_id, label AS cell, v, nrm FROM ranked
-         |  WHERE crk = 1 AND vec_id >= $N_QUERIES $extraAssignedPred
-         |), probes AS (
-         |  SELECT vec_id AS q_id, label AS cell, v AS qv, nrm AS qn FROM ranked
-         |  WHERE crk <= $NPROBE AND vec_id < $N_QUERIES
-         |), scored AS (
-         |  SELECT p.q_id, a.cell, a.vec_id,
-         |    round($dotAQ / (a.nrm * p.qn), 6) AS sim
-         |  FROM assigned a JOIN probes p USING (cell)
-         |)
-         |SELECT q_id, rk, cell, vec_id, sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-         |  FROM scored
-         |) WHERE rk <= $K ORDER BY q_id, rk""".stripMargin
-  }
+  /** The IVF serve replay up to its candidates: `assigned`, each indexed
+    * vector's home cell (`extraAssignedPred`, e.g. "AND vec_id % 17 <> 0",
+    * narrows the index), and `probes`, each query's NPROBE nearest cells. */
+  private def ivfProbeCtes(extraAssignedPred: String) =
+    s"""$quantizerRankedCtesSql, assigned AS (
+       |  SELECT vec_id, label AS cell, vlabel, v, nrm FROM qranked
+       |  WHERE crk = 1 AND vec_id >= $N_QUERIES $extraAssignedPred
+       |), probes AS (
+       |  SELECT vec_id AS q_id, label AS cell, v AS qv, nrm AS qn FROM qranked
+       |  WHERE crk <= $NPROBE AND vec_id < $N_QUERIES
+       |)""".stripMargin
+
+  /** sim_ann_ivf's oracle over an index narrowed by `extraAssignedPred` —
+    * with a delete predicate, the 'full rebuild minus the deleted ids'
+    * truth that sim_ann_delete's merge-on-read serve must equal. */
+  private def annIvfSqlWhere(extraAssignedPred: String) =
+    s"""WITH ${ivfProbeCtes(extraAssignedPred)}, scored AS (
+       |  SELECT p.q_id, a.cell, a.vec_id,
+       |    round($dotAPSql / (a.nrm * p.qn), 6) AS sim
+       |  FROM assigned a JOIN probes p USING (cell)
+       |)
+       |${topKSql("q_id, rk, cell, vec_id, sim")}""".stripMargin
 
   private val annIvfSql = annIvfSqlWhere("")
 
@@ -2327,40 +2287,11 @@ object Similarity {
   // (window partitioned by (q_id, predicate)), post_n counts how many of
   // the UNFILTERED top-K would have survived — the under-return the
   // pre-filter form exists to avoid.
-  private val annFilteredSql = {
-    val dotAC =
-      "list_reduce(list_transform(generate_series(1, len(e.v)), i -> e.v[i]*c.cv[i]), (a,x) -> a+x)"
-    val dotAQ =
-      "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*p.qv[i]), (x,y) -> x+y)"
-    s"""WITH $eCte,
-       |ex AS (
-       |  SELECT label, i AS dim, v[i] AS val
-       |  FROM e, unnest(generate_series(1, len(v))) AS t(i)
-       |), centd AS (
-       |  SELECT label, dim,
-       |    CAST(SUM(CAST(val AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS c
-       |  FROM ex GROUP BY 1, 2
-       |), cent AS (
-       |  SELECT label, list(c ORDER BY dim) AS cv FROM centd GROUP BY label
-       |), centn AS (
-       |  SELECT label, cv,
-       |    sqrt(list_reduce(list_transform(cv, x -> x*x), (a,x) -> a+x)) AS cn
-       |  FROM cent
-       |), ranked AS (
-       |  SELECT e.vec_id, e.v, e.nrm, e.label AS vlabel, c.label,
-       |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |      round($dotAC / (e.nrm * c.cn), 6) DESC, c.label ASC) AS crk
-       |  FROM e CROSS JOIN centn c
-       |), assigned AS (
-       |  SELECT vec_id, label AS cell, vlabel, v, nrm FROM ranked
-       |  WHERE crk = 1 AND vec_id >= $N_QUERIES
-       |), probes AS (
-       |  SELECT vec_id AS q_id, label AS cell, v AS qv, nrm AS qn FROM ranked
-       |  WHERE crk <= $NPROBE AND vec_id < $N_QUERIES
-       |), scored AS (
+  private val annFilteredSql =
+    s"""WITH ${ivfProbeCtes("")}, scored AS (
        |  SELECT p.q_id, a.cell, a.vec_id, a.vlabel AS label,
        |    (a.vlabel % $FILTER_MOD = 0) AS keep,
-       |    round($dotAQ / (a.nrm * p.qn), 6) AS sim
+       |    round($dotAPSql / (a.nrm * p.qn), 6) AS sim
        |  FROM assigned a JOIN probes p USING (cell)
        |), rk AS (
        |  SELECT *,
@@ -2379,7 +2310,6 @@ object Similarity {
        |FROM rk r LEFT JOIN post p USING (q_id)
        |WHERE r.keep AND r.rk_fil <= $K
        |ORDER BY q_id, rk""".stripMargin
-  }
 
   private val annMultiprobeSql = {
     def flipSql(i: Int) =
@@ -2395,46 +2325,16 @@ object Similarity {
        |  SELECT p.q_id, eb.vec_id, round($dotSql / (eb.nrm * p.qn), 6) AS sim
        |  FROM eb JOIN probes p ON eb.bkt = p.pbkt WHERE eb.vec_id >= $N_QUERIES
        |)
-       |SELECT q_id, rk, vec_id, sim FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored
-       |) WHERE rk <= $K ORDER BY q_id, rk""".stripMargin
+       |${topKSql("q_id, rk, vec_id, sim")}""".stripMargin
   }
 
   /** Shared CTE chain for the knn-graph oracles: quantizer cells (as in
     * sim_ann_ivf), nearest-cell assignment, within-cell pairwise scores,
     * per-source top-KNN_K as `knn`. */
-  private val knnCtes = {
-    val dotAC =
-      "list_reduce(list_transform(generate_series(1, len(e.v)), i -> e.v[i]*c.cv[i]), (a,x) -> a+x)"
-    val dotAB =
-      "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)"
-    s"""$eCte,
-       |ex AS (
-       |  SELECT label, i AS dim, v[i] AS val
-       |  FROM e, unnest(generate_series(1, len(v))) AS t(i)
-       |), centd AS (
-       |  SELECT label, dim,
-       |    CAST(SUM(CAST(val AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS c
-       |  FROM ex GROUP BY 1, 2
-       |), cent AS (
-       |  SELECT label, list(c ORDER BY dim) AS cv FROM centd GROUP BY label
-       |), centn AS (
-       |  SELECT label, cv,
-       |    sqrt(list_reduce(list_transform(cv, x -> x*x), (a,x) -> a+x)) AS cn
-       |  FROM cent
-       |), cs AS (
-       |  SELECT e.vec_id, e.v, e.nrm, c.label,
-       |    round($dotAC / (e.nrm * c.cn), 6) AS csim
-       |  FROM e CROSS JOIN centn c
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY csim DESC, label ASC) AS crk FROM cs
-       |), assigned AS (
-       |  SELECT vec_id, label AS cell, v, nrm FROM ranked WHERE crk = 1
-       |), scored AS (
+  private val knnCtes =
+    s"""$assignedCtes, scored AS (
        |  SELECT a.vec_id AS src, b.vec_id AS dst, a.cell,
-       |    round($dotAB / (a.nrm * b.nrm), 6) AS sim
+       |    round($dotABSql / (a.nrm * b.nrm), 6) AS sim
        |  FROM assigned a JOIN assigned b
        |    ON a.cell = b.cell AND a.vec_id <> b.vec_id
        |), knn AS (
@@ -2443,7 +2343,6 @@ object Similarity {
        |      ORDER BY sim DESC, dst ASC) AS rk FROM scored
        |  ) WHERE rk <= $KNN_K
        |)""".stripMargin
-  }
 
   val oracles: Map[String, String] = Map(
     "sim_covariance" ->
@@ -2615,8 +2514,7 @@ object Similarity {
          |FROM hits ORDER BY method, q_id""".stripMargin,
     // the same single-join + per-k conditional-count ladder
     "sim_ivf_imbalance" ->
-      s"""WITH $eCte,
-         |$quantizerRankedCtesSql,
+      s"""WITH $quantizerRankedCtesSql,
          |cells AS (
          |  SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vectors
          |  FROM qranked WHERE crk = 1 AND vec_id >= $N_QUERIES
@@ -2663,17 +2561,14 @@ object Similarity {
          |    THEN round(CAST(n_hits AS DOUBLE) / (k * n_queries), 6)
          |    ELSE NULL END AS recall
          |FROM hits CROSS JOIN nq ORDER BY k""".stripMargin,
-    "dedup_embed_cosine" -> {
-      val dotAb =
-        "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)"
+    "dedup_embed_cosine" ->
       s"""WITH $eCte,
          |eb AS (SELECT *, $bucketSql AS bkt FROM e)
          |SELECT a.vec_id AS v1, b.vec_id AS v2,
-         |  round($dotAb / (a.nrm * b.nrm), 6) AS sim
+         |  round($dotABSql / (a.nrm * b.nrm), 6) AS sim
          |FROM eb a JOIN eb b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
-         |WHERE round($dotAb / (a.nrm * b.nrm), 6) >= 0.45
-         |ORDER BY v1, v2""".stripMargin
-    },
+         |WHERE round($dotABSql / (a.nrm * b.nrm), 6) >= 0.45
+         |ORDER BY v1, v2""".stripMargin,
     "sim_knn_graph" ->
       s"""WITH $knnCtes
          |SELECT src, rk, dst, cell, sim FROM knn ORDER BY src, rk""".stripMargin,
@@ -2686,19 +2581,15 @@ object Similarity {
          |  FROM knn WHERE sim >= $KNN_EDGE_TAU
          |), edges AS (
          |  SELECT d1 AS u, d2 AS v FROM ke UNION SELECT d2, d1 FROM ke
-         |), reach(u, r) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-         |)
+         |), ${DedupOps.reachCte("edges")}
          |SELECT u AS vec_id, MIN(r) AS cluster_id
          |FROM reach GROUP BY u ORDER BY vec_id""".stripMargin,
     "dedup_semantic" ->
-      s"""WITH $semAssignedCtes, dup AS (
+      s"""WITH $assignedCtes, dup AS (
          |  SELECT DISTINCT a.vec_id
          |  FROM assigned a JOIN assigned b
          |    ON a.cell = b.cell AND a.vec_id <> b.vec_id
-         |  WHERE round($semDotAB / (a.nrm * b.nrm), 6) >= $SEM_TAU
+         |  WHERE round($dotABSql / (a.nrm * b.nrm), 6) >= $SEM_TAU
          |    AND (b.csim < a.csim OR (b.csim = a.csim AND b.vec_id < a.vec_id))
          |)
          |SELECT a.vec_id, a.cell, a.csim, (d.vec_id IS NOT NULL) AS dropped
@@ -2708,13 +2599,13 @@ object Similarity {
     // the sweep floor, tier frame LEFT-joins the counts (empty tier →
     // explicit zero row), per-edge loser = higher csim (tie: larger id)
     "sim_dedup_threshold_sweep" ->
-      s"""WITH $semAssignedCtes, prs AS (
+      s"""WITH $assignedCtes, prs AS (
          |  SELECT a.vec_id AS v1, b.vec_id AS v2,
-         |    round($semDotAB / (a.nrm * b.nrm), 6) AS sim,
+         |    round($dotABSql / (a.nrm * b.nrm), 6) AS sim,
          |    a.csim AS cs1, b.csim AS cs2
          |  FROM assigned a JOIN assigned b
          |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE round($semDotAB / (a.nrm * b.nrm), 6)
+         |  WHERE round($dotABSql / (a.nrm * b.nrm), 6)
          |    >= CAST(${SWEEP_TAU_PCT.min} AS DOUBLE) / 100.0
          |), t AS (
          |  SELECT CAST(unnest([${SWEEP_TAU_PCT.mkString(", ")}]) AS BIGINT)
@@ -2777,20 +2668,12 @@ object Similarity {
          |    AS norm_b
          |FROM j GROUP BY label ORDER BY label""".stripMargin,
     "sim_centroid_cohesion" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |ex AS (
-         |  SELECT vec_id, label, i AS dim, v[i] AS val
-         |  FROM e, unnest(generate_series(1, len(v))) AS t(i)
-         |), cent AS (
-         |  SELECT label, dim,
-         |    CAST(SUM(CAST(val AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS c
-         |  FROM ex GROUP BY 1, 2
-         |), folded AS (
+      s"""WITH $centdCtes, folded AS (
          |  SELECT ex.vec_id, ex.label,
-         |    list_reduce(list(ex.val * cent.c ORDER BY ex.dim), (a,x) -> a+x) AS vc,
+         |    list_reduce(list(ex.val * centd.c ORDER BY ex.dim), (a,x) -> a+x) AS vc,
          |    list_reduce(list(ex.val * ex.val ORDER BY ex.dim), (a,x) -> a+x) AS vv,
-         |    list_reduce(list(cent.c * cent.c ORDER BY ex.dim), (a,x) -> a+x) AS cc
-         |  FROM ex JOIN cent ON ex.label = cent.label AND ex.dim = cent.dim
+         |    list_reduce(list(centd.c * centd.c ORDER BY ex.dim), (a,x) -> a+x) AS cc
+         |  FROM ex JOIN centd ON ex.label = centd.label AND ex.dim = centd.dim
          |  GROUP BY 1, 2
          |), cosv AS (
          |  SELECT label, round(vc / (sqrt(vv) * sqrt(cc)), 6) AS cos FROM folded

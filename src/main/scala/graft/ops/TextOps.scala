@@ -879,6 +879,30 @@ object TextOps {
 
   private val stopList = stopwords.map(w => s"'$w'").mkString(", ")
 
+  // BM25 (k1 = 1.2, b = 0.75) over whitespace tokens, shared by
+  // text_bm25_topk and the hybrid lexical arm: corpus statistics `tok`,
+  // `dl`, `st` and `dfr`; one term's contribution (needs `tf`); and a
+  // doc's score, its contributions folded in term order
+  private val bm25StatsCtes =
+    """tok AS (
+      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+      |), dl AS (
+      |  SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1
+      |), st AS (
+      |  SELECT COUNT(*) AS n_docs,
+      |         CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
+      |  FROM dl
+      |), dfr AS (
+      |  SELECT w, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1
+      |)""".stripMargin
+  private val bm25ContribSql =
+    """ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0) *
+      |      (CAST(tf AS DOUBLE) * 2.2) /
+      |      (CAST(tf AS DOUBLE) +
+      |        1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))""".stripMargin
+  private val bm25ScoreSql =
+    "round(list_reduce(list_prepend(0.0, list(contrib ORDER BY w)), (a, x) -> a + x), 6)"
+
   // Lexical-arm CTEs (per-query more-like-this BM25: each batch doc's own
   // distinct terms are its query, self-hit excluded) ending in `lexr` —
   // shared by text_hybrid_rrf and text_hybrid_recall. All float constants
@@ -886,32 +910,16 @@ object TextOps {
   // order and the two RRF terms add in one fixed order (lex + vec) so the
   // doubles agree bitwise.
   private val hybridLexCtes =
-    s"""tok AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-       |), dl AS (
-       |  SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1
-       |), st AS (
-       |  SELECT COUNT(*) AS n_docs,
-       |         CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-       |  FROM dl
-       |), dfr AS (
-       |  SELECT w, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1
-       |), qt AS (
+    s"""$bm25StatsCtes, qt AS (
        |  SELECT DISTINCT doc_id AS q_id, w FROM tok WHERE doc_id < $HYBRID_Q
        |), tf AS (
        |  SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY 1, 2
        |), sc AS (
-       |  SELECT q.q_id, tf.doc_id, tf.w,
-       |    ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0) *
-       |      (CAST(tf AS DOUBLE) * 2.2) /
-       |      (CAST(tf AS DOUBLE) +
-       |        1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl)) AS contrib
+       |  SELECT q.q_id, tf.doc_id, tf.w, $bm25ContribSql AS contrib
        |  FROM tf JOIN qt q USING (w) JOIN dfr USING (w) JOIN dl USING (doc_id), st
        |  WHERE tf.doc_id <> q.q_id
        |), bm AS (
-       |  SELECT q_id, doc_id,
-       |    round(list_reduce(list_prepend(0.0, list(contrib ORDER BY w)),
-       |      (a, x) -> a + x), 6) AS score
+       |  SELECT q_id, doc_id, $bm25ScoreSql AS score
        |  FROM sc GROUP BY q_id, doc_id
        |), lexr AS (
        |  SELECT q_id, doc_id, lex_rk FROM (
@@ -926,9 +934,7 @@ object TextOps {
   // (crk <= NPROBE), candidates restricted to the probed cells' postings
   // (crk = 1, self-hit excluded), exact rerank within them — ending in
   // `semr`.
-  private val hybridSemAnnCtes = {
-    val dotAQ =
-      "list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*p.qv[i]), (x,y) -> x+y)"
+  private val hybridSemAnnCtes =
     s"""${Similarity.quantizerRankedCtesSql},
        |sassigned AS (
        |  SELECT vec_id, label AS cell, v, nrm FROM qranked
@@ -938,7 +944,7 @@ object TextOps {
        |  WHERE crk <= ${Similarity.NPROBE} AND vec_id < $HYBRID_Q
        |), sem AS (
        |  SELECT p.q_id, a.vec_id AS doc_id,
-       |    round($dotAQ / (a.nrm * p.qn), 6) AS sim
+       |    round(${Similarity.dotAPSql} / (a.nrm * p.qn), 6) AS sim
        |  FROM sassigned a JOIN sprobes p USING (cell)
        |  WHERE a.vec_id <> p.q_id
        |), semr AS (
@@ -947,7 +953,6 @@ object TextOps {
        |      ORDER BY sim DESC, doc_id) AS BIGINT) AS vec_rk FROM sem)
        |  WHERE vec_rk <= $HYBRID_N
        |)""".stripMargin
-  }
 
   // Per-query RRF fusion of `lexr` and a semantic rank list, with the
   // final per-query rank attached — parameterized on the semantic CTE
@@ -969,7 +974,6 @@ object TextOps {
 
   private val hybridRrfSql =
     s"""WITH $hybridLexCtes,
-       |${Similarity.eCteSql},
        |$hybridSemAnnCtes,
        |${hybridFusedCte("semr", "fused")}
        |SELECT q_id, doc_id, lex_rk, vec_rk, rrf, rk FROM fused
@@ -996,7 +1000,6 @@ object TextOps {
          |  WHERE vec_rk <= $HYBRID_N
          |)""".stripMargin
     s"""WITH $hybridLexCtes,
-       |${Similarity.eCteSql},
        |$hybridSemAnnCtes,
        |$semExactCtes,
        |${hybridFusedCte("semr", "fa")},
@@ -1023,35 +1026,19 @@ object TextOps {
     // identical expression TREE (same literals, same association) so the
     // doubles agree bitwise; per-doc sum folds in term order
     "text_bm25_topk" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-        |), dl AS (
-        |  SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1
-        |), st AS (
-        |  SELECT COUNT(*) AS n_docs,
-        |         CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-        |  FROM dl
-        |), dfr AS (
-        |  SELECT w, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1
-        |), q AS (
-        |  SELECT w, df FROM (
-        |    SELECT w, df, row_number() OVER (ORDER BY df DESC, w) AS rk FROM dfr)
-        |  WHERE rk IN (10, 20, 30)
-        |), tf AS (
-        |  SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY 1, 2
-        |), sc AS (
-        |  SELECT tf.doc_id, tf.w,
-        |    ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0) *
-        |      (CAST(tf AS DOUBLE) * 2.2) /
-        |      (CAST(tf AS DOUBLE) +
-        |        1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl)) AS contrib
-        |  FROM tf JOIN q USING (w) JOIN dl USING (doc_id), st
-        |)
-        |SELECT doc_id, COUNT(*) AS n_terms,
-        |  round(list_reduce(list_prepend(0.0, list(contrib ORDER BY w)),
-        |    (a, x) -> a + x), 6) AS score
-        |FROM sc GROUP BY doc_id
-        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
+      s"""WITH $bm25StatsCtes, q AS (
+         |  SELECT w, df FROM (
+         |    SELECT w, df, row_number() OVER (ORDER BY df DESC, w) AS rk FROM dfr)
+         |  WHERE rk IN (10, 20, 30)
+         |), tf AS (
+         |  SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY 1, 2
+         |), sc AS (
+         |  SELECT tf.doc_id, tf.w, $bm25ContribSql AS contrib
+         |  FROM tf JOIN q USING (w) JOIN dl USING (doc_id), st
+         |)
+         |SELECT doc_id, COUNT(*) AS n_terms, $bm25ScoreSql AS score
+         |FROM sc GROUP BY doc_id
+         |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
     "text_inverted_index" ->
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents

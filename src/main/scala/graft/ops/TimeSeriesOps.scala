@@ -1170,6 +1170,31 @@ object TimeSeriesOps {
     "ts_seasonal_decompose" -> tsSeasonalDecompose,
   )
 
+  /** The resample and interpolation oracles' observations: `ev` is the
+    * events' value series, and `obs(user_id, h, v)` keeps each (user,
+    * hour)'s last event by (ts, event_id). */
+  private val hourlyObsCtes =
+    """ev AS (
+      |  SELECT user_id, ts, event_id, "value" AS v FROM events
+      |), obs AS (
+      |  SELECT user_id, h, v FROM (
+      |    SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, v,
+      |      row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
+      |        ORDER BY ts DESC, event_id DESC) AS rk
+      |    FROM ev) WHERE rk = 1
+      |)""".stripMargin
+
+  // the resample oracles' output: each (user, hour) of `grid` filled
+  // forward from `obs`, ignoring nulls
+  private val filledGridSql =
+    """SELECT g.user_id, g.h AS hour,
+      |  last_value(o.v IGNORE NULLS) OVER (PARTITION BY g.user_id
+      |    ORDER BY g.h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |    AS filled,
+      |  CAST(CASE WHEN o.v IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_obs
+      |FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.h = o.h
+      |ORDER BY g.user_id, hour""".stripMargin
+
   /** Shared oracle substrate: every trailing M-window scored against the
     * z-normalized pattern (same folds, same order) — the batch top-k and
     * the streaming threshold-match oracles both SELECT from `scored`. */
@@ -1242,58 +1267,30 @@ object TimeSeriesOps {
     // same per-key grid start, same (ts, event_id) tie order, same
     // ignore-nulls fill
     "ts_resample_ffill" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id, "value" AS v FROM events
-        |), b AS (
-        |  SELECT CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS hi FROM ev
-        |), kl AS (
-        |  SELECT user_id, CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS lo
-        |  FROM ev GROUP BY 1
-        |), grid AS (
-        |  SELECT user_id, unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h
-        |  FROM kl, b
-        |), obs AS (
-        |  SELECT user_id, h, v FROM (
-        |    SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, v,
-        |      row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |        ORDER BY ts DESC, event_id DESC) AS rk
-        |    FROM ev) WHERE rk = 1
-        |)
-        |SELECT g.user_id, g.h AS hour,
-        |  last_value(o.v IGNORE NULLS) OVER (PARTITION BY g.user_id
-        |    ORDER BY g.h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS filled,
-        |  CAST(CASE WHEN o.v IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_obs
-        |FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.h = o.h
-        |ORDER BY g.user_id, hour""".stripMargin,
+      s"""WITH $hourlyObsCtes, b AS (
+         |  SELECT CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS hi FROM ev
+         |), kl AS (
+         |  SELECT user_id, CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS lo
+         |  FROM ev GROUP BY 1
+         |), grid AS (
+         |  SELECT user_id, unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h
+         |  FROM kl, b
+         |)
+         |$filledGridSql""".stripMargin,
     // globally aligned grid: every key from the global start, NULL fill
     // before a key's first observation; same tie order and fill semantics
     "ts_resample_aligned" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id, "value" AS v FROM events
-        |), b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS lo,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS hi
-        |  FROM ev
-        |), hours AS (
-        |  SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b
-        |), grid AS (
-        |  SELECT user_id, h FROM (SELECT DISTINCT user_id FROM ev)
-        |  CROSS JOIN hours
-        |), obs AS (
-        |  SELECT user_id, h, v FROM (
-        |    SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, v,
-        |      row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |        ORDER BY ts DESC, event_id DESC) AS rk
-        |    FROM ev) WHERE rk = 1
-        |)
-        |SELECT g.user_id, g.h AS hour,
-        |  last_value(o.v IGNORE NULLS) OVER (PARTITION BY g.user_id
-        |    ORDER BY g.h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS filled,
-        |  CAST(CASE WHEN o.v IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_obs
-        |FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.h = o.h
-        |ORDER BY g.user_id, hour""".stripMargin,
+      s"""WITH $hourlyObsCtes, b AS (
+         |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS lo,
+         |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS hi
+         |  FROM ev
+         |), hours AS (
+         |  SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b
+         |), grid AS (
+         |  SELECT user_id, h FROM (SELECT DISTINCT user_id FROM ev)
+         |  CROSS JOIN hours
+         |)
+         |$filledGridSql""".stripMargin,
     // identical decimal-exact window moments: DECIMAL(15,2) and its exact
     // square summed per frame, cast to double only after the sum (raw
     // integers < 2^53 so the cast is exact in both engines)
@@ -1347,33 +1344,25 @@ object TimeSeriesOps {
     // same bucket dedup / bracket windows over observations, same integer
     // microsecond lerp fraction cast to double
     "ts_interp_linear" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id, "value" AS v FROM events
-        |), obs AS (
-        |  SELECT user_id, h, v FROM (
-        |    SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, v,
-        |      row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |        ORDER BY ts DESC, event_id DESC) AS rk
-        |    FROM ev) WHERE rk = 1
-        |), sp AS (
-        |  SELECT user_id, h, v,
-        |    lead(h) OVER wk AS next_h, lead(v) OVER wk AS next_v
-        |  FROM obs WINDOW wk AS (PARTITION BY user_id ORDER BY h)
-        |), g AS (
-        |  SELECT user_id, h, v, next_h, next_v,
-        |    unnest(generate_series(h, coalesce(next_h - INTERVAL 1 HOUR, h),
-        |                           INTERVAL 1 HOUR)) AS bucket
-        |  FROM sp
-        |)
-        |SELECT user_id, bucket AS hour,
-        |  CAST(floor((CASE WHEN bucket = h THEN v
-        |    ELSE v + (next_v - v) *
-        |      (CAST(epoch_us(bucket) - epoch_us(h) AS DOUBLE) /
-        |       CAST(epoch_us(next_h) - epoch_us(h) AS DOUBLE)) END)
-        |    * 1e6 + 0.5) AS DOUBLE) / 1e6 AS interp,
-        |  CAST(CASE WHEN bucket = h AND v IS NOT NULL THEN 1 ELSE 0 END
-        |    AS BIGINT) AS is_obs
-        |FROM g ORDER BY user_id, hour""".stripMargin,
+      s"""WITH $hourlyObsCtes, sp AS (
+         |  SELECT user_id, h, v,
+         |    lead(h) OVER wk AS next_h, lead(v) OVER wk AS next_v
+         |  FROM obs WINDOW wk AS (PARTITION BY user_id ORDER BY h)
+         |), g AS (
+         |  SELECT user_id, h, v, next_h, next_v,
+         |    unnest(generate_series(h, coalesce(next_h - INTERVAL 1 HOUR, h),
+         |                           INTERVAL 1 HOUR)) AS bucket
+         |  FROM sp
+         |)
+         |SELECT user_id, bucket AS hour,
+         |  CAST(floor((CASE WHEN bucket = h THEN v
+         |    ELSE v + (next_v - v) *
+         |      (CAST(epoch_us(bucket) - epoch_us(h) AS DOUBLE) /
+         |       CAST(epoch_us(next_h) - epoch_us(h) AS DOUBLE)) END)
+         |    * 1e6 + 0.5) AS DOUBLE) / 1e6 AS interp,
+         |  CAST(CASE WHEN bucket = h AND v IS NOT NULL THEN 1 ELSE 0 END
+         |    AS BIGINT) AS is_obs
+         |FROM g ORDER BY user_id, hour""".stripMargin,
     // the SAME driver-computed weight doubles, embedded as exact-decimal
     // strings cast to double (string→double parse recovers the bits); the
     // weighted sum folds left in both engines

@@ -541,21 +541,26 @@ object TrainOps {
        |  FROM documents
        |)""".stripMargin
 
-  private[ops] def stepSql(k: Int): String = {
-    val wPrev = s"w$k"
+  // model k's scores: the centering constant c_k, then each doc's score
+  // s_k — shared by every GD step and the final model
+  private def scoreCtes(k: Int): String =
     s""", c$k AS (
        |  SELECT CAST(SUM(CAST((w.wgt * st.mu) / st.sd AS DECIMAL(30,6)))
        |    AS DOUBLE) AS c
-       |  FROM $wPrev w JOIN stats st USING (bucket)
+       |  FROM w$k w JOIN stats st USING (bucket)
        |), s$k AS MATERIALIZED (
        |  SELECT f.doc_id, f.y,
        |    CAST(SUM(CAST((w.wgt * f.x) / st.sd AS DECIMAL(30,6))) AS DOUBLE)
        |      - c.c + b.b AS s
-       |  FROM feats f JOIN $wPrev w USING (bucket)
+       |  FROM feats f JOIN w$k w USING (bucket)
        |    JOIN stats st USING (bucket)
        |    CROSS JOIN c$k c CROSS JOIN b$k b
        |  GROUP BY f.doc_id, f.y, c.c, b.b
-       |), m$k AS (
+       |)""".stripMargin
+
+  // model k's metrics row m_k (the trainCurve columns)
+  private def metricsCte(k: Int): String =
+    s""", m$k AS (
        |  SELECT CAST($k AS BIGINT) AS step,
        |    CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
        |    CAST(SUM(CASE WHEN y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg,
@@ -571,72 +576,41 @@ object TrainOps {
        |      / (SELECT n FROM nn) AS acc,
        |    (SELECT b FROM b$k) AS bias
        |  FROM s$k
-       |), gb$k AS (
-       |  SELECT CAST(SUM(CAST(s - y AS DECIMAL(30,6))) AS DOUBLE) AS gb
-       |  FROM s$k
-       |), g$k AS (
-       |  SELECT f.bucket,
-       |    CAST(SUM(CAST(((s.s - f.y) * f.x) / st.sd AS DECIMAL(30,6)))
-       |      AS DOUBLE) AS g
-       |  FROM feats f JOIN s$k s USING (doc_id)
-       |    JOIN stats st USING (bucket)
-       |  GROUP BY f.bucket
-       |), w${k + 1} AS (
-       |  SELECT w.bucket,
-       |    w.wgt - $LR * ((coalesce(g.g, 0.0) - st.mu / st.sd * gb.gb)
-       |      / nn.n + $LAMBDA * w.wgt) AS wgt
-       |  FROM w$k w LEFT JOIN g$k g USING (bucket)
-       |    JOIN stats st USING (bucket)
-       |    CROSS JOIN gb$k gb CROSS JOIN nn
-       |), b${k + 1} AS (
-       |  SELECT b.b - $LR * (gb.gb / nn.n) AS b
-       |  FROM b$k b CROSS JOIN gb$k gb CROSS JOIN nn
        |)""".stripMargin
-  }
 
-  // final-model scoring (c_N + s_N) — shared by the train oracle's last
-  // metrics row and the apply oracle's corpus gating
-  private val finalScoreCtes: String =
-    s""", c$STEPS AS (
-       |  SELECT CAST(SUM(CAST((w.wgt * st.mu) / st.sd AS DECIMAL(30,6)))
-       |    AS DOUBLE) AS c
-       |  FROM w$STEPS w JOIN stats st USING (bucket)
-       |), s$STEPS AS MATERIALIZED (
-       |  SELECT f.doc_id, f.y,
-       |    CAST(SUM(CAST((w.wgt * f.x) / st.sd AS DECIMAL(30,6))) AS DOUBLE)
-       |      - c.c + b.b AS s
-       |  FROM feats f JOIN w$STEPS w USING (bucket)
-       |    JOIN stats st USING (bucket)
-       |    CROSS JOIN c$STEPS c CROSS JOIN b$STEPS b
-       |  GROUP BY f.doc_id, f.y, c.c, b.b
-       |)""".stripMargin
+  // one GD step: model k's scores and metrics, its gradient, model k+1
+  private[ops] def stepSql(k: Int): String =
+    scoreCtes(k) + metricsCte(k) +
+      s""", gb$k AS (
+         |  SELECT CAST(SUM(CAST(s - y AS DECIMAL(30,6))) AS DOUBLE) AS gb
+         |  FROM s$k
+         |), g$k AS (
+         |  SELECT f.bucket,
+         |    CAST(SUM(CAST(((s.s - f.y) * f.x) / st.sd AS DECIMAL(30,6)))
+         |      AS DOUBLE) AS g
+         |  FROM feats f JOIN s$k s USING (doc_id)
+         |    JOIN stats st USING (bucket)
+         |  GROUP BY f.bucket
+         |), w${k + 1} AS (
+         |  SELECT w.bucket,
+         |    w.wgt - $LR * ((coalesce(g.g, 0.0) - st.mu / st.sd * gb.gb)
+         |      / nn.n + $LAMBDA * w.wgt) AS wgt
+         |  FROM w$k w LEFT JOIN g$k g USING (bucket)
+         |    JOIN stats st USING (bucket)
+         |    CROSS JOIN gb$k gb CROSS JOIN nn
+         |), b${k + 1} AS (
+         |  SELECT b.b - $LR * (gb.gb / nn.n) AS b
+         |  FROM b$k b CROSS JOIN gb$k gb CROSS JOIN nn
+         |)""".stripMargin
 
   private val trainSql: String = {
     val steps = (0 until STEPS).map(stepSql).mkString
-    // the final model's metrics (step = STEPS) reuse the same block shape
-    // minus the gradient CTEs
-    val last = finalScoreCtes +
-      s""", m$STEPS AS (
-         |  SELECT CAST($STEPS AS BIGINT) AS step,
-         |    CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         |    CAST(SUM(CASE WHEN y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg,
-         |    CAST(SUM(CASE WHEN y = 1.0 THEN CAST(s AS DECIMAL(30,6)) END) AS DOUBLE)
-         |      / CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS DOUBLE) AS mean_pos,
-         |    CAST(SUM(CASE WHEN y = 0.0 THEN CAST(s AS DECIMAL(30,6)) END) AS DOUBLE)
-         |      / CAST(SUM(CASE WHEN y = 0.0 THEN 1 ELSE 0 END) AS DOUBLE) AS mean_neg,
-         |    CAST(SUM(CASE WHEN y = 1.0 THEN CAST(s AS DECIMAL(30,6)) END) AS DOUBLE)
-         |      / CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    - CAST(SUM(CASE WHEN y = 0.0 THEN CAST(s AS DECIMAL(30,6)) END) AS DOUBLE)
-         |      / CAST(SUM(CASE WHEN y = 0.0 THEN 1 ELSE 0 END) AS DOUBLE) AS sep_gap,
-         |    CAST(SUM(CASE WHEN (s >= 0.5) = (y = 1.0) THEN 1 ELSE 0 END) AS DOUBLE)
-         |      / (SELECT n FROM nn) AS acc,
-         |    (SELECT b FROM b$STEPS) AS bias
-         |  FROM s$STEPS
-         |)""".stripMargin
+    // the final model's metrics (step = STEPS): the same score and
+    // metrics blocks, no gradient
     val out = (0 to STEPS).map(k => s"SELECT * FROM m$k")
       .mkString("\n UNION ALL ")
     s"""WITH $headerCtes
-       |$steps$last
+       |$steps${scoreCtes(STEPS)}${metricsCte(STEPS)}
        |$out
        |ORDER BY step""".stripMargin
   }
@@ -681,7 +655,7 @@ object TrainOps {
   private lazy val applySql: String = {
     val steps = (0 until STEPS).map(stepSql).mkString
     s"""WITH $headerCtes
-       |$steps$finalScoreCtes
+       |$steps${scoreCtes(STEPS)}
        |SELECT d.source, COUNT(*) AS n_docs,
        |  CAST(SUM(CASE WHEN s.s >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
        |    AS n_keep,

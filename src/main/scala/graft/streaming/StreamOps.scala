@@ -1729,16 +1729,9 @@ object StreamOps {
       val agree = (0 until graft.ops.DedupOps.N_MINHASH)
         .map(i => s"(CASE WHEN s1.mh$i = s2.mh$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
-      s"""WITH ${graft.ops.DedupOps.tok3Cte},
-         |${graft.ops.DedupOps.sigCte},
-         |${graft.ops.DedupOps.bandsCte},
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |)
+      s"""WITH ${graft.ops.DedupOps.pairsCtes}
          |SELECT d1, d2, CAST($agree AS BIGINT) AS n_agree
-         |FROM cand
+         |FROM pairs
          |JOIN sig s1 ON d1 = s1.doc_id
          |JOIN sig s2 ON d2 = s2.doc_id
          |WHERE $agree >= 4

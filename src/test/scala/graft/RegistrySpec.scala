@@ -34,4 +34,15 @@ class RegistrySpec extends AnyFunSuite {
     assert(qs == os,
       s"query/oracle name drift: only-queries=${qs -- os} only-oracles=${os -- qs}")
   }
+
+  test("every oracle renders: SELECT or WITH first, no unexpanded interpolation") {
+    // a shared SQL fragment spliced into a string that lost its `s`
+    // interpolator leaves `${name}` or `$name` in the text
+    val unexpanded = """\$\{|\$[A-Za-z_]""".r
+    val bad = SparkEntry.oracleSql.collect {
+      case (k, sql) if !(sql.startsWith("SELECT") || sql.startsWith("WITH")) ||
+          unexpanded.findFirstIn(sql).isDefined => k
+    }
+    assert(bad.isEmpty, s"oracles with a broken render: ${bad.toSeq.sorted}")
+  }
 }

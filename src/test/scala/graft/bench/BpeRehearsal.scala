@@ -21,6 +21,7 @@ object BpeRehearsal {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.ops.Fs.cleanupOnExit(spark)
     spark.range(1000).selectExpr("sum(id)").collect()
     def usedHeapMb(): Long = {
       System.gc()
@@ -52,7 +53,6 @@ object BpeRehearsal {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BPE_REHEARSAL.json"), json)
     println(json)
-    graft.ops.Fs.cleanupAppScratch(spark)
     spark.stop()
   }
 }

@@ -26,6 +26,7 @@ object FullSf1 {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.ops.Fs.pointStreamCheckpointsAtTmpfs(spark)
+    graft.ops.Fs.cleanupOnExit(spark)
     spark.range(1000).selectExpr("sum(id)").collect()
     val all = graft.SparkEntry.queries.keys.toSeq.sorted
     val queries =
@@ -81,7 +82,6 @@ object FullSf1 {
           s"""{"metric":"scale_rehearsal_full","stat":"median_of_$PASSES","sf1_dir":"${dirs(1)}","generator":"tools/gen_sf1.py","load":"${loadavg()}","notes":"$notes","worst_ratios":$worst10,"queries":{""",
           ",", "}}"))
     }
-    graft.ops.Fs.cleanupAppScratch(spark)
     spark.stop()
   }
 }

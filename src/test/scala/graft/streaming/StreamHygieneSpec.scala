@@ -81,7 +81,7 @@ class StreamHygieneSpec extends SparkSpec {
     graft.SparkEntry.queries("text_hybrid_rrf")(spark, dir).count()
     graft.SparkEntry.queries("cot_stream_poll")(spark, dir).count()
     assert(mine().nonEmpty, "expected live scratch dirs before cleanup")
-    graft.ops.Fs.cleanupAppScratch(spark)
+    graft.ops.Fs.cleanupAppScratch(spark.sparkContext.applicationId)
     assert(mine().isEmpty,
       s"scratch survived cleanupAppScratch: ${mine().mkString(", ")}")
     // nothing this test created may survive — a scratch name without the
